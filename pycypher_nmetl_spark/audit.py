@@ -20,6 +20,7 @@ from __future__ import annotations
 import json
 import logging
 import os
+import threading
 import time
 import uuid
 from typing import Any
@@ -102,9 +103,13 @@ class EngineMetrics:
             "mutations_committed": 0,
             "query_timeouts": 0,
         }
+        # engines serve concurrent threads; += is a read-modify-write
+        self._lock = threading.Lock()
 
     def inc(self, name: str, by: int = 1) -> None:
-        self.counters[name] = self.counters.get(name, 0) + by
+        with self._lock:
+            self.counters[name] = self.counters.get(name, 0) + by
 
     def as_lines(self) -> list[str]:
-        return [f"{k} {v}" for k, v in sorted(self.counters.items())]
+        with self._lock:
+            return [f"{k} {v}" for k, v in sorted(self.counters.items())]

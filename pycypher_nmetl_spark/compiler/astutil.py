@@ -9,15 +9,51 @@ from pycypher_nmetl_spark.cypher.ast_nodes import CountStar, Expr, FuncCall
 from pycypher_nmetl_spark.functions.scalar import AGGREGATE_FUNCTIONS
 
 
-def walk(node: Any) -> Iterator[Any]:
-    """Yield node and all dataclass descendants (pre-order)."""
-    if dataclasses.is_dataclass(node) and not isinstance(node, type):
-        yield node
-        for f in dataclasses.fields(node):
-            yield from walk(getattr(node, f.name))
-    elif isinstance(node, (list, tuple)):
-        for item in node:
-            yield from walk(item)
+def walk(node: Any, stop: tuple[type, ...] = ()) -> Iterator[Any]:
+    """Yield node and all dataclass descendants, pre-order and left to
+    right; subtrees rooted at a ``stop`` type are skipped (not yielded)."""
+    stack = [node]
+    while stack:
+        n = stack.pop()
+        if isinstance(n, (list, tuple)):
+            stack.extend(reversed(n))
+        elif (
+            dataclasses.is_dataclass(n)
+            and not isinstance(n, type)
+            and not isinstance(n, stop)
+        ):
+            yield n
+            stack.extend(
+                getattr(n, f.name) for f in reversed(dataclasses.fields(n))
+            )
+
+
+#: every call draws a fresh value
+_RANDOM_FUNCTIONS = frozenset({"rand", "randomuuid"})
+#: the clock functions of functions/scalar.py: a zero-argument call reads
+#: the current date/time
+_CLOCK_FUNCTIONS = frozenset(
+    {"date", "datetime", "localdate", "localdatetime", "localtime", "timestamp", "now"}
+)
+
+
+def is_nondeterministic(node: Any) -> bool:
+    """True when the AST (query / clause / expression, any nesting) calls
+    a function whose value can differ between two evaluations: rand(),
+    randomUUID() or a zero-argument clock call such as datetime().
+
+    The package's one AST-level nondeterminism rule: it decides result-
+    cache admission, CALL {} invocation granularity (a nondeterministic
+    body runs once per invoking row), the evaluate-once binding of a CASE
+    operand, and the fallback of the engine's analyzed-plan check."""
+    return any(
+        isinstance(n, FuncCall)
+        and (
+            n.name in _RANDOM_FUNCTIONS
+            or (not n.args and n.name in _CLOCK_FUNCTIONS)
+        )
+        for n in walk(node)
+    )
 
 
 def ast_key(node: Any) -> Any:

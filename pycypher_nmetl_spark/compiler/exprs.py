@@ -31,6 +31,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pycypher_nmetl_spark.compiler.astutil import is_nondeterministic
 from pycypher_nmetl_spark.compiler.bindings import Bindings, pcol
 from pycypher_nmetl_spark.cypher.ast_nodes import (
     BinOp, BoolOp, CaseExpr, Cmp, CountStar, ExistsSub, Expr, FuncCall,
@@ -1271,11 +1272,9 @@ class ExprCompiler:
         return F.when(length == 0, F.slice(xs, 1, 0)).otherwise(F.slice(xs, lo + 1, length))
 
     def _c_CaseExpr(self, e: CaseExpr) -> Column:
-        from pycypher_nmetl_spark.engine import _ast_nondeterministic
-
         result = None
         if e.operand is not None:
-            if _ast_nondeterministic(e.operand):
+            if is_nondeterministic(e.operand):
                 # CASE rand() WHEN ...: the operand must be evaluated
                 # ONCE per row — expanding it into each WHEN's Cmp would
                 # draw a fresh rand() per branch. Bind it as a HOF

@@ -40,6 +40,7 @@ from typing import TYPE_CHECKING
 
 from pyspark.sql import functions as F
 
+from pycypher_nmetl_spark.compiler.astutil import walk
 from pycypher_nmetl_spark.compiler.bindings import Bindings, VarInfo, fresh_name
 from pycypher_nmetl_spark.cypher.ast_nodes import (
     BoolOp, MapLit, NodePattern, PathPattern, QuantPathPattern, RelPattern,
@@ -91,20 +92,6 @@ def _rename_element(el, mapping: dict[str, str]):
     if el2.var in mapping:
         el2 = dataclasses.replace(el2, var=mapping[el2.var])
     return el2
-
-
-def _var_names(node, acc: set[str]) -> set[str]:
-    """Collect every Var name referenced in an AST fragment."""
-    if isinstance(node, Var):
-        acc.add(node.name)
-        return acc
-    if dataclasses.is_dataclass(node) and not isinstance(node, type):
-        for f in dataclasses.fields(node):
-            _var_names(getattr(node, f.name), acc)
-    elif isinstance(node, (list, tuple)):
-        for x in node:
-            _var_names(x, acc)
-    return acc
 
 
 def _merge_props(a, b):
@@ -307,9 +294,7 @@ def _expand_combo(
     # them id_only so the hop compiler binds them from the edge endpoint
     # column instead of joining the node table (patterns._expand honors
     # the flag only when the edge registration proves the label).
-    where_refs: set[str] = set()
-    for w in out_wheres:
-        _var_names(w, where_refs)
+    where_refs = {n.name for n in walk(out_wheres) if isinstance(n, Var)}
     for idx, el in enumerate(chain.elements):
         if (
             idx > 0  # element 0 seeds the scan, never an _expand target

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pycypher_nmetl_spark.catalog import GraphCatalog
+from pycypher_nmetl_spark.compiler.astutil import is_nondeterministic, walk
 from pycypher_nmetl_spark.compiler.bindings import Bindings, VarInfo
 from pycypher_nmetl_spark.compiler.exprs import ExprCompiler
 from pycypher_nmetl_spark.compiler.patterns import compile_match, materialize_subpatterns
@@ -95,44 +96,18 @@ def _plan_deterministic(df, fallback: bool = False) -> bool:
     if _PLAN_INTROSPECTION_OK is False:
         return fallback
     try:
-        def walk(node) -> bool:
+        def plan_walk(node) -> bool:
             if not node.deterministic():
                 return False
             ch = node.children()
-            return all(walk(ch.apply(i)) for i in range(ch.size()))
+            return all(plan_walk(ch.apply(i)) for i in range(ch.size()))
 
-        out = walk(df._jdf.queryExecution().analyzed())
+        out = plan_walk(df._jdf.queryExecution().analyzed())
         _PLAN_INTROSPECTION_OK = True
         return out
     except Exception:  # Spark Connect / py4j API drift
         _PLAN_INTROSPECTION_OK = False
         return fallback
-
-
-def _ast_nondeterministic(obj) -> bool:
-    """True when the AST (clause / expression / any nesting) calls a
-    non-deterministic function (rand, randomUUID). Used to decide CALL {}
-    invocation granularity: a non-deterministic body must evaluate once
-    per invoking ROW (Neo4j), never once per deduped invocation class."""
-    import dataclasses
-
-    from pycypher_nmetl_spark.cypher.ast_nodes import FuncCall
-
-    stack = [obj]
-    while stack:
-        o = stack.pop()
-        if isinstance(o, FuncCall) and str(o.name).lower() in (
-            "rand",
-            "randomuuid",
-        ):
-            return True
-        if dataclasses.is_dataclass(o) and not isinstance(o, type):
-            stack.extend(getattr(o, f.name) for f in dataclasses.fields(o))
-        elif isinstance(o, (list, tuple, set)):
-            stack.extend(o)
-        elif isinstance(o, dict):
-            stack.extend(o.values())
-    return False
 
 
 class CypherEngine:
@@ -171,10 +146,10 @@ class CypherEngine:
         import threading as _threading
 
         self._deadline_active = _threading.local()
-        # per-thread: did any clause compiled so far in the current query
-        # call a non-deterministic function? (the AST-level fallback for
-        # _plan_deterministic on deployments without plan introspection)
-        self._nondet_seen = _threading.local()
+        # per-thread: does the query being compiled call a non-deterministic
+        # function? (the AST-level fallback for _plan_deterministic on
+        # deployments without plan introspection)
+        self._query_nondet = _threading.local()
         from pycypher_nmetl_spark.audit import EngineMetrics
 
         self.metrics = EngineMetrics()
@@ -272,6 +247,7 @@ class CypherEngine:
             ast = parse(cypher)
         except CypherSyntaxError as e:
             return [f"syntax: {e}"]
+        self._query_nondet.flag = is_nondeterministic(ast)
         params = parameters or {}
         # unknown labels/types in READ patterns: since round 9 these
         # legally match zero rows at execution (openCypher), so the
@@ -295,7 +271,6 @@ class CypherEngine:
             self.catalog.rollback()
 
     def _unknown_read_labels(self, ast) -> list[str]:
-        from pycypher_nmetl_spark.compiler.astutil import walk
         from pycypher_nmetl_spark.cypher.ast_nodes import (
             Create, Match, Merge, NodePattern, RelPattern, UnionQuery,
         )
@@ -457,6 +432,7 @@ class CypherEngine:
         try:
             ast = parse(cypher)
             self._semantic_check(ast)
+            self._query_nondet.flag = nondet = is_nondeterministic(ast)
             if self.max_complexity is not None:
                 from pycypher_nmetl_spark.guards import check_complexity
 
@@ -487,11 +463,13 @@ class CypherEngine:
         )
         if (
             key is not None
+            and not nondet
             and not mutated
             and getattr(result, "_cy_mixed", None) is None
         ):
             # cache the compiled lazy plan (not rows): hits skip parse +
             # compile; reads stay distributed (reference: result_cache.py).
+            # A non-deterministic query must re-evaluate on every call.
             # Mixed-output frames are NOT cached: they carry a per-row
             # decode tag a plain execute() of the same text must not see
             self.cache.put(key, result, self.catalog.data_epoch)
@@ -811,6 +789,7 @@ class CypherEngine:
             try:
                 for spec in order_queries(specs):
                     ast = asts[spec.id]
+                    self._query_nondet.flag = is_nondeterministic(ast)
                     # the same guard rails execute() applies per query —
                     # the batch path must not void them
                     t0 = _time.perf_counter()
@@ -1016,8 +995,6 @@ class CypherEngine:
         via `v.prop`, an inline `{prop: val}` map on a re-bound pattern
         var, or any whole-variable use (RETURN v, labels(v), v[key],
         WITH v AS w, ...), which conservatively keeps all of them."""
-        import dataclasses as _dc
-
         from pycypher_nmetl_spark.compiler.bindings import pcol
         from pycypher_nmetl_spark.cypher.ast_nodes import (
             MapLit, Prop, Var,
@@ -1026,19 +1003,7 @@ class CypherEngine:
         needed: set[tuple[str, str]] = set()
         var_occ: dict[str, int] = {}
         prop_occ: dict[str, int] = {}
-        stack = list(remaining)
-        while stack:
-            node = stack.pop()
-            if node is None:
-                continue
-            if isinstance(node, (list, tuple)):
-                stack.extend(node)
-                continue
-            if isinstance(node, dict):
-                stack.extend(node.values())
-                continue
-            if not (_dc.is_dataclass(node) and not isinstance(node, type)):
-                continue
+        for node in walk(remaining):
             if isinstance(node, Prop) and isinstance(node.target, Var):
                 needed.add((node.target.name, node.key))
                 prop_occ[node.target.name] = prop_occ.get(node.target.name, 0) + 1
@@ -1049,8 +1014,6 @@ class CypherEngine:
             if isinstance(v, str) and isinstance(props, MapLit):
                 for k, _ in props.pairs:
                     needed.add((v, k))
-            for f in _dc.fields(node):
-                stack.append(getattr(node, f.name))
 
         # whole-variable use = Var occurrences beyond those that were
         # only the target of a Prop access
@@ -1187,11 +1150,6 @@ class CypherEngine:
         # clause metrics; here "execution" is lazy so this measures the
         # driver-side compile + any eager mutation actions)
         self.last_compile_report: list[tuple[str, float]] = []
-        if initial is None:
-            # fresh query scope: reset the per-thread AST-nondeterminism
-            # marker (share_scans seeds keep the seeding query's flag —
-            # conservative, and the seed is a MATCH run anyway)
-            self._nondet_seen.flag = False
         bindings = initial if initial is not None else Bindings.unit(self.spark)
         for clause in clauses:
             t0 = time.perf_counter()
@@ -1208,10 +1166,6 @@ class CypherEngine:
 
     def _run_clause(self, clause, bindings, params, mutations):
         """Dispatch one clause; returns (new_bindings, result_df_or_None)."""
-        if not getattr(self._nondet_seen, "flag", False) and (
-            _ast_nondeterministic(clause)
-        ):
-            self._nondet_seen.flag = True
         if isinstance(clause, Match):
             return compile_match(self, bindings, clause, params), None
         if isinstance(clause, Projection):
@@ -1271,7 +1225,7 @@ class CypherEngine:
         schema = {f.name: f.dataType for f in bindings.df.schema.fields}
         nondet = body_nondet or not _plan_deterministic(
             bindings.df,
-            fallback=not getattr(self._nondet_seen, "flag", False),
+            fallback=not getattr(self._query_nondet, "flag", False),
         )
         if nondet:
             key_col = None
@@ -1372,7 +1326,7 @@ class CypherEngine:
             self._subquery_carry_key(
                 bindings,
                 all_imports,
-                any(_ast_nondeterministic(br.clauses) for br in branches),
+                is_nondeterministic([br.clauses for br in branches]),
             )
         )
         key_universe = inner_df.select(key)
@@ -1516,7 +1470,7 @@ class CypherEngine:
         # imports). rand()/uuid() on either side -> checkpointed-id path.
         key, outer_df, outer, _import_cols, enclosing, inner_df = (
             self._subquery_carry_key(
-                bindings, clause.imports, _ast_nondeterministic(body)
+                bindings, clause.imports, is_nondeterministic(body)
             )
         )
         # inner scope: carry key + imported vars (with satellite columns);

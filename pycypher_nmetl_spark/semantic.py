@@ -21,6 +21,7 @@ from difflib import get_close_matches
 from enum import Enum
 from typing import Any, Iterable
 
+from pycypher_nmetl_spark.compiler.astutil import walk
 from pycypher_nmetl_spark.cypher.ast_nodes import (
     CallProc, CallSubquery, CountStar, Create, Delete, ExistsSub, Expr,
     Foreach, FuncCall, ListComp, MapProjection, Match, Merge, NodePattern,
@@ -161,35 +162,25 @@ class SemanticValidator:
             self._validate_query(ast)
         return self.errors
 
-    def _check_reserved_names(self, node: Any, seen: set | None = None) -> None:
+    def _check_reserved_names(self, ast: Any) -> None:
         """Variables with the ``__cq`` prefix are reserved for the CALL
         subquery carry keys (compile_projection treats them specially) —
         reject them anywhere in the AST before they can corrupt a plan."""
-        if seen is None:
-            seen = set()
-        if id(node) in seen or node is None or isinstance(node, (str, int, float, bool, bytes)):
-            return
-        seen.add(id(node))
-        name = getattr(node, "var", None) or (
-            node.name if isinstance(node, Var) else None
-        )
-        alias = getattr(node, "alias", None)
-        for n in (name, alias):
-            if isinstance(n, str) and n.startswith("__cq"):
-                self.errors.append(
-                    ValidationError(
-                        severity=ErrorSeverity.ERROR,
-                        message=f"variable name '{n}' uses the reserved "
-                        "'__cq' prefix (CALL subquery carry keys)",
-                        variable_name=n,
+        for node in walk(ast):
+            name = getattr(node, "var", None) or (
+                node.name if isinstance(node, Var) else None
+            )
+            alias = getattr(node, "alias", None)
+            for n in (name, alias):
+                if isinstance(n, str) and n.startswith("__cq"):
+                    self.errors.append(
+                        ValidationError(
+                            severity=ErrorSeverity.ERROR,
+                            message=f"variable name '{n}' uses the reserved "
+                            "'__cq' prefix (CALL subquery carry keys)",
+                            variable_name=n,
+                        )
                     )
-                )
-        if dataclasses.is_dataclass(node):
-            for f in dataclasses.fields(node):
-                self._check_reserved_names(getattr(node, f.name), seen)
-        elif isinstance(node, (list, tuple)):
-            for x in node:
-                self._check_reserved_names(x, seen)
 
     # ------------------------------------------------------------------ #
     def _validate_query(self, q: Query) -> None:
@@ -374,7 +365,7 @@ class SemanticValidator:
             )
 
     def _check_unknown_functions(self, expr: Any) -> None:
-        for node in _walk_nodes(expr):
+        for node in walk(expr):
             if isinstance(node, FuncCall):
                 name = node.name.lower()
                 if name not in self._functions:
@@ -393,7 +384,7 @@ class SemanticValidator:
         return self._find_aggregation(expr) is not None
 
     def _find_aggregation(self, expr: Any) -> str | None:
-        for node in _walk_nodes(expr, stop=(ExistsSub, PatternComp, PatternPred)):
+        for node in walk(expr, stop=(ExistsSub, PatternComp, PatternPred)):
             if isinstance(node, CountStar):
                 return "count"
             if isinstance(node, FuncCall) and node.name.lower() in self._aggs:
@@ -505,23 +496,6 @@ class SemanticValidator:
         for v in child.used_vars:
             if v not in child.defined_vars:
                 scope.use(v)
-
-
-def _walk_nodes(expr: Any, stop: tuple = ()):  # noqa: ANN001
-    """Yield every AST node in the expression tree, skipping subtrees
-    rooted at `stop` types (their inner scope has its own rules)."""
-    stack = [expr]
-    while stack:
-        node = stack.pop()
-        if node is None or isinstance(node, stop):
-            continue
-        if isinstance(node, (list, tuple)):
-            stack.extend(node)
-            continue
-        if dataclasses.is_dataclass(node) and not isinstance(node, type):
-            yield node
-            for f in dataclasses.fields(node):
-                stack.append(getattr(node, f.name))
 
 
 def validate_query(

@@ -23,7 +23,9 @@ def pytest_collection_modifyitems(config, items):
     with the full 2 h suite via SPARK_GRAFT_FULL_SUITE=1, or select
     explicitly with `-m slow` / `-m ""`.
     """
-    if os.environ.get("SPARK_GRAFT_FULL_SUITE") or config.getoption("-m"):
+    # any -m, even an empty `-m ""`, selects by marker explicitly
+    marker_given = any(a.startswith("-m") for a in config.invocation_params.args)
+    if os.environ.get("SPARK_GRAFT_FULL_SUITE") or marker_given:
         return
     selected, deselected = [], []
     for it in items:

@@ -15,6 +15,7 @@ tests/load_testing/test_concurrent_queries.py, test_error_resilience.py):
 
 from __future__ import annotations
 
+import sys
 import threading
 
 import pytest
@@ -51,11 +52,13 @@ def _run_threads(fns):
 
         return inner
 
-    ts = [threading.Thread(target=wrap(fn)) for fn in fns]
+    ts = [threading.Thread(target=wrap(fn), daemon=True) for fn in fns]
     for t in ts:
         t.start()
     for t in ts:
-        t.join()
+        t.join(timeout=600)
+        if t.is_alive():
+            errors.append(TimeoutError(f"{t.name} still running"))
     return errors
 
 
@@ -106,6 +109,53 @@ def test_readers_never_see_torn_commit(ceng):
         "MATCH (i:Item)-[:OF]->(:Hub) RETURN count(*) AS c"
     ).collect()[0][0]
     assert final == 12
+
+
+def test_cache_on_reads_interleaved_with_creates(spark):
+    """The result cache at its default (on), shared by reader threads that
+    repeat a few texts while a writer CREATEs Items of rank 1, 2, ...:
+    every read sees a committed prefix of the writes (count c, rank sum
+    (c-1)c/2), and every execute() counts exactly once as a hit or a miss."""
+    cat = GraphCatalog(spark)
+    cat.register_nodes(
+        "Item", spark.createDataFrame([(0, 0)], "id long, rank long")
+    )
+    eng = CypherEngine(cat)
+    reads = [
+        "MATCH (i:Item) RETURN count(*) AS c, sum(i.rank) AS s",
+        "MATCH (i:Item) WHERE i.rank >= 0 RETURN count(*) AS c, sum(i.rank) AS s",
+        "MATCH (i:Item) WITH i.rank AS r RETURN count(r) AS c, sum(r) AS s",
+    ]
+    calls: list[int] = []
+    wrong: list[tuple] = []
+    lock = threading.Lock()
+
+    def writer():
+        for k in range(1, 7):
+            eng.execute(f"CREATE (:Item {{id: {k}, rank: {k}}})")
+            with lock:
+                calls.append(1)
+
+    def reader():
+        for _ in range(3):
+            for q in reads:
+                c, s = eng.execute(q).collect()[0]
+                with lock:
+                    calls.append(1)
+                    if s != (c - 1) * c // 2:
+                        wrong.append((q, c, s))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-4)
+    try:
+        errors = _run_threads([writer] + [reader] * 6)
+    finally:
+        sys.setswitchinterval(old)
+    assert not errors
+    assert wrong == []
+    assert len(calls) == 6 + 6 * 3 * len(reads)
+    assert eng.cache.hits + eng.cache.misses == len(calls)
+    assert eng.metrics.counters["queries_compiled"] == eng.cache.misses
 
 
 def test_concurrent_writers_no_lost_updates(ceng):

@@ -365,6 +365,12 @@ def test_durable_bucketed_roundtrip_shuffle_free_hop(spark, tmp_path):
             "MATCH (a:Person)-[:KNOWS]->(b:Person) RETURN count(*) AS c"
         ).collect()[0][0]
         assert got == 50
+        out = eng.execute(
+            "MATCH (a:Person)-[:KNOWS]->(b:Person) RETURN a.name AS a, b.name AS b"
+        )
+        assert sorted(tuple(r) for r in out.collect()) == sorted(
+            (f"p{i}", f"p{(i + 1) % 50}") for i in range(50)
+        )
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
