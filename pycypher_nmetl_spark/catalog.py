@@ -167,40 +167,44 @@ class GraphCatalog:
     # ------------------------------------------------------------------ #
     # lookup
     # ------------------------------------------------------------------ #
+    def _store(self, kind: str) -> dict[str, DataFrame]:
+        """Active node ('n') or edge ('e') tables: this thread's shadow
+        inside a transaction, else the committed ones."""
+        shadow = getattr(self._tl, "nodes" if kind == "n" else "edges", None)
+        if shadow is not None:
+            return shadow
+        return self._nodes if kind == "n" else self._edges
+
     def nodes(self, label: str) -> DataFrame:
-        store = self._shadow_nodes if self._shadow_nodes is not None else self._nodes
+        store = self._store("n")
         if label not in store:
             raise KeyError(f"unknown node label {label!r}; known: {sorted(store)}")
         return store[label]
 
     def edges(self, rel_type: str) -> DataFrame:
-        store = self._shadow_edges if self._shadow_edges is not None else self._edges
+        store = self._store("e")
         if rel_type not in store:
             raise KeyError(f"unknown relationship type {rel_type!r}; known: {sorted(store)}")
         return store[rel_type]
 
     def has_label(self, label: str) -> bool:
-        store = self._shadow_nodes if self._shadow_nodes is not None else self._nodes
-        return label in store
+        return label in self._store("n")
 
     def has_rel_type(self, rel_type: str) -> bool:
-        store = self._shadow_edges if self._shadow_edges is not None else self._edges
-        return rel_type in store
+        return rel_type in self._store("e")
 
     def labels(self) -> list[str]:
-        store = self._shadow_nodes if self._shadow_nodes is not None else self._nodes
-        return sorted(store)
+        return sorted(self._store("n"))
 
     def rel_types(self) -> list[str]:
-        store = self._shadow_edges if self._shadow_edges is not None else self._edges
-        return sorted(store)
+        return sorted(self._store("e"))
 
     def edge_endpoints(self, rel_type: str) -> tuple[str | None, str | None]:
         return self._edge_endpoints.get(rel_type, (None, None))
 
     def property_keys(self) -> list[str]:
         keys: set[str] = set()
-        for df in list(self._nodes.values()) + list(self._edges.values()):
+        for df in [*self._store("n").values(), *self._store("e").values()]:
             keys.update(c for c in df.columns if c not in (ID, SRC, DST))
         return sorted(keys)
 
@@ -211,14 +215,6 @@ class GraphCatalog:
     # ------------------------------------------------------------------ #
     # transactions (shadow layer -> atomic pointer swap)
     # ------------------------------------------------------------------ #
-    @property
-    def _shadow_nodes(self):
-        return getattr(self._tl, "nodes", None)
-
-    @property
-    def _shadow_edges(self):
-        return getattr(self._tl, "edges", None)
-
     def begin(self) -> None:
         """Open a query-scoped shadow transaction (thread-local).
 
@@ -227,6 +223,8 @@ class GraphCatalog:
         """
         self._tl.nodes = dict(self._nodes)
         self._tl.edges = dict(self._edges)
+        # relationship types this transaction registered endpoints for
+        self._tl.new_types = set()
 
     def commit(self, durable_path: str | None = None) -> None:
         """Promote shadows to canonical tables (atomic pointer swap).
@@ -235,12 +233,11 @@ class GraphCatalog:
         ``durable_path`` the committed state is additionally persisted
         via :meth:`save_durable` (crash-consistent parquet snapshot).
         """
-        if self._shadow_nodes is not None:
-            self._nodes = self._shadow_nodes
-            self._edges = self._shadow_edges
+        if self.in_transaction():
+            self._nodes = self._tl.nodes
+            self._edges = self._tl.edges
             self.data_epoch += 1
-        self._tl.nodes = None
-        self._tl.edges = None
+        self._tl.nodes = self._tl.edges = self._tl.new_types = None
         if durable_path is not None:
             self.save_durable(durable_path)
 
@@ -441,20 +438,20 @@ class GraphCatalog:
 
     def rollback(self) -> None:
         """Discard uncommitted shadows (reference: rollback_query)."""
-        self._tl.nodes = None
-        self._tl.edges = None
         # endpoint registrations are not shadowed; entries promoted for
         # types created inside the rolled-back transaction would go stale
-        # (set_edges' setdefault would later resurrect them for a
-        # different table) — prune registrations with no canonical table.
-        # Degradations (label -> None) persisting past a rollback are
-        # safe: they only forfeit an optimization.
-        for rt in list(self._edge_endpoints):
+        # (a later set_edges would keep them for a different table) —
+        # prune the ones THIS transaction registered that have no
+        # canonical table; another thread's open transaction keeps its
+        # own. Degradations (label -> None) persisting past a rollback
+        # are safe: they only forfeit an optimization.
+        for rt in getattr(self._tl, "new_types", None) or ():
             if rt not in self._edges:
                 self._edge_endpoints.pop(rt, None)
+        self._tl.nodes = self._tl.edges = self._tl.new_types = None
 
     def in_transaction(self) -> bool:
-        return self._shadow_nodes is not None
+        return getattr(self._tl, "nodes", None) is not None
 
     # ------------------------------------------------------------------ #
     # id allocation support (see mutations.py CREATE)
@@ -480,8 +477,7 @@ class GraphCatalog:
 
     def set_nodes(self, label: str, df: DataFrame) -> None:
         """Write a node table into the active shadow (or canonical store)."""
-        store = self._shadow_nodes if self._shadow_nodes is not None else self._nodes
-        store[label] = df
+        self._store("n")[label] = df
         # the edge-as-node-projection equivalence no longer holds once the
         # owner table diverges from the registered edge frame
         for rt, (owner, _side, _fk) in list(self._fk_collapse.items()):
@@ -489,10 +485,17 @@ class GraphCatalog:
                 self._fk_collapse.pop(rt, None)
 
     def set_edges(self, rel_type: str, df: DataFrame) -> None:
-        store = self._shadow_edges if self._shadow_edges is not None else self._edges
-        store[rel_type] = df
-        self._edge_endpoints.setdefault(rel_type, (None, None))
+        self._store("e")[rel_type] = df
+        self._set_endpoints(rel_type, self.edge_endpoints(rel_type))
         self._fk_collapse.pop(rel_type, None)
+
+    def _set_endpoints(self, rel_type: str, ends: tuple[str | None, str | None]) -> None:
+        """Record an endpoint registration; a type first registered inside
+        this thread's transaction is noted so its rollback can prune it."""
+        new_types = getattr(self._tl, "new_types", None)
+        if new_types is not None and rel_type not in self._edge_endpoints:
+            new_types.add(rel_type)
+        self._edge_endpoints[rel_type] = ends
 
     def reconcile_edge_endpoints(
         self,
@@ -525,7 +528,7 @@ class GraphCatalog:
         else:  # brand-new type: promote uniquely-proven labels
             s = src_labels[0] if src_labels and len(src_labels) == 1 else None
             d = dst_labels[0] if dst_labels and len(dst_labels) == 1 else None
-        self._edge_endpoints[rel_type] = (s, d)
+        self._set_endpoints(rel_type, (s, d))
 
     def fk_collapse(self, rel_type: str) -> tuple[str, str, str] | None:
         """(owner_label, owner_side, fk_prop) when the edge table is a pure

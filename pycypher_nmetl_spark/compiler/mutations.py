@@ -14,12 +14,18 @@ then maintained from the checkpointed new rows' maxima; see
 GraphCatalog.id_base), so id assignment is fully distributed and
 gap-tolerant with no per-statement table scan.
 
-Determinism note: a DataFrame with freshly-allocated ids is
-``localCheckpoint``-ed before it is used twice (catalog union + continued
-bindings) — otherwise lazy re-evaluation could assign different ids to
-the two consumers (the classic monotonically_increasing_id recompute
-trap). At production scale this materialization would be a Delta/parquet
-write instead; the checkpoint is its local-mode stand-in.
+Write-back rule: each mutation clause materializes exactly one frame
+(``localCheckpoint``), and every table write (``_write``) combines the
+table only with frames cut from that materialization. CREATE
+materializes the bindings once they hold the new ids and values; SET and
+REMOVE of a property, the bindings plus the evaluated values; DELETE and
+REMOVE of a label, the bound ids; SET of a label, the rows the label
+gains. MERGE and FOREACH are composed of these. So every value (a fresh
+id, ``rand()``, ``randomUUID()``) is computed once, RETURN sees exactly
+what was stored, and no table is joined to its own lineage: a table's
+plan grows by a constant per write instead of doubling. At production
+scale the materialization would be a Delta/parquet write; the checkpoint
+is its local-mode stand-in.
 """
 
 from __future__ import annotations
@@ -32,8 +38,8 @@ from pyspark.sql import functions as F
 from pycypher_nmetl_spark.compiler.bindings import Bindings, VarInfo, fresh_name, pcol
 from pycypher_nmetl_spark.compiler.exprs import ExprCompiler
 from pycypher_nmetl_spark.cypher.ast_nodes import (
-    Create, Delete, Foreach, MapLit, Match, Merge, NodePattern, Param,
-    PathPattern, Prop, Remove, RelPattern, SetClause, SetItem, Unwind, Var,
+    Create, Delete, Foreach, Literal, MapLit, Match, Merge, NodePattern, Param,
+    Prop, Remove, RelPattern, SetClause, SetItem, Var,
 )
 
 if TYPE_CHECKING:
@@ -101,6 +107,70 @@ def _advance_id_base(
     cat.note_max_id(kind, name, bound)
 
 
+def _write(cat, kind: str, name: str, change) -> None:
+    """The one table write-back: node table (kind 'n') or edge table
+    ('e') ``name`` becomes ``change(old)``, where ``old`` is the current
+    table or None for a new label/type."""
+    if kind == "n":
+        cat.set_nodes(name, change(cat.nodes(name) if cat.has_label(name) else None))
+    else:
+        cat.set_edges(name, change(cat.edges(name) if cat.has_rel_type(name) else None))
+
+
+def _append(rows: DataFrame):
+    """``_write`` change that adds ``rows`` to the table."""
+    return lambda old: (
+        rows if old is None else old.unionByName(rows, allowMissingColumns=True)
+    )
+
+
+def _without(ids: dict[str, DataFrame | None]):
+    """``_write`` change that drops every row whose column ``c`` holds an
+    id of the id frame ``ids[c]`` (None: no constraint)."""
+    def change(old: DataFrame) -> DataFrame:
+        for col, idf in ids.items():
+            if idf is not None:
+                old = old.join(idf.select(F.col(ID).alias(col)), on=col, how="left_anti")
+        return old
+
+    return change
+
+
+def _entity_rows(df: DataFrame, var: str, cols: list[str] | None = None) -> DataFrame:
+    """Table-shaped rows of ``var``: its id column as ``id`` and each
+    ``var__k`` column in ``cols`` (default: all of them) as ``k``."""
+    if cols is None:
+        cols = [c for c in df.columns if c.startswith(f"{var}__")]
+    return df.select(
+        F.col(var).alias(ID), *[F.col(c).alias(c[len(var) + 2 :]) for c in cols]
+    )
+
+
+def _keyed(df: DataFrame, var: str, disc: str | None, *cols: str) -> DataFrame:
+    """``var``'s id as ``id``, its label discriminator ``disc`` (if any)
+    as ``_disc``, and ``cols``."""
+    return df.select(
+        F.col(var).alias(ID), *([F.col(disc).alias("_disc")] if disc else []), *cols
+    )
+
+
+def _by_table(frame: DataFrame, disc: str | None, tables: list[str]) -> dict:
+    """{table: the rows of a ``_keyed`` frame that belong to it}: with a
+    discriminator each table gets only the rows whose id came from it
+    (ids are only unique per table)."""
+    if disc is None:
+        return {t: frame for t in tables}
+    return {t: frame.filter(F.col("_disc") == t).drop("_disc") for t in tables}
+
+
+def _cut_ids(bindings: Bindings, var: str, disc: str | None, tables: list[str]):
+    """The materialization of DELETE and REMOVE label: the ids bound to
+    ``var``, checkpointed (they only feed anti/semi joins, so repeats
+    are harmless). Returns (all ids, {table: its ids})."""
+    ids = _keyed(bindings.df, var, disc).localCheckpoint()
+    return ids.drop("_disc"), _by_table(ids, disc, tables)
+
+
 def _props_pairs(engine, props, params) -> list[tuple[str, object]]:
     """Property map of a pattern -> [(key, value_expr_ast)]; supports
     inline maps and `$param` maps (literalized driver-side)."""
@@ -109,8 +179,6 @@ def _props_pairs(engine, props, params) -> list[tuple[str, object]]:
     if isinstance(props, MapLit):
         return list(props.pairs)
     if isinstance(props, Param):
-        from pycypher_nmetl_spark.cypher.ast_nodes import Literal
-
         value = params.get(props.name)
         if not isinstance(value, dict):
             raise ValueError(f"${props.name} must be a map for a property pattern")
@@ -124,7 +192,6 @@ def _props_pairs(engine, props, params) -> list[tuple[str, object]]:
 def compile_create(
     engine: "CypherEngine", bindings: Bindings, clause: Create, params: dict
 ) -> Bindings:
-    cat = engine.catalog
     for path in clause.paths:
         elements = path.elements
         # pass 1: create unbound node vars (one new node per binding row)
@@ -217,19 +284,7 @@ def _create_nodes(
                 )
         cat.note_max_id("n", label, row["m"])
 
-    new_rows = df.select(
-        F.col(var).alias(ID),
-        *[
-            F.col(c).alias(c[len(var) + 2 :])
-            for c in df.columns
-            if c.startswith(f"{var}__")
-        ],
-    )
-    if known:
-        table = cat.nodes(label).unionByName(new_rows, allowMissingColumns=True)
-    else:
-        table = new_rows
-    cat.set_nodes(label, table)
+    _write(cat, "n", label, _append(_entity_rows(df, var)))
     return Bindings(df, {**bindings.vars, var: VarInfo("node", (label,), anon=var.startswith("_anon"))})
 
 
@@ -264,21 +319,6 @@ def _create_edges(
     df = df.localCheckpoint()
     _advance_id_base(cat, "e", rtype, df, base_max, rvar)
 
-    skip = {pcol(rvar, "src"), pcol(rvar, "dst")}
-    new_rows = df.select(
-        F.col(rvar).alias(ID),
-        F.col(pcol(rvar, "src")).alias(SRC),
-        F.col(pcol(rvar, "dst")).alias(DST),
-        *[
-            F.col(c).alias(c[len(rvar) + 2 :])
-            for c in df.columns
-            if c.startswith(f"{rvar}__") and c not in skip
-        ],
-    )
-    if known:
-        table = cat.edges(rtype).unionByName(new_rows, allowMissingColumns=True)
-    else:
-        table = new_rows
     # Endpoint-registration enforcement (VERDICT r12 #4): the appended
     # rows must not silently invalidate the (src_label, dst_label) proof
     # the compiler's elisions lean on — degrade any side the bound vars
@@ -292,7 +332,8 @@ def _create_edges(
     cat.reconcile_edge_endpoints(
         rtype, _proven_labels(src_var), _proven_labels(dst_var)
     )
-    cat.set_edges(rtype, table)
+    # rvar__src / rvar__dst were added first, so the rows lead id, src, dst
+    _write(cat, "e", rtype, _append(_entity_rows(df, rvar)))
     return Bindings(
         df, {**bindings.vars, rvar: VarInfo("rel", (rtype,), anon=rel.var is None)}
     )
@@ -302,22 +343,20 @@ def _create_edges(
 # SET (mutation_engine.py:118-228, binding_frame.py:1487-1777)
 # ------------------------------------------------------------------------- #
 def _candidate_labels(engine, bindings: Bindings, var: str) -> tuple[str, list[str]]:
-    """(kind, tables-to-touch) for a mutated variable."""
+    """(kind, tables-to-touch) for a mutated variable. Labels/types never
+    registered have no table to touch: a var bound by (OPTIONAL) MATCH on
+    an unknown label is empty/null, and mutating it is a no-op per
+    openCypher (round-9 TCK delete-optional-null-noop)."""
     info = bindings.vars.get(var)
     if info is None:
         raise KeyError(f"undefined variable {var!r}")
+    if info.kind not in ("node", "rel", "value"):
+        raise ValueError(f"cannot mutate {info.kind} variable {var!r}")
     cat = engine.catalog
-    if info.kind == "node":
-        # labels never registered have no table to touch: a var bound by
-        # (OPTIONAL) MATCH on an unknown label is empty/null, and
-        # mutating it is a no-op per openCypher (round-9 TCK
-        # delete-optional-null-noop) — not a KeyError downstream
-        labels = [lb for lb in info.labels if cat.has_label(lb)]
-        return "n", labels if info.labels else cat.labels()
-    if info.kind == "rel":
-        types = [t for t in info.labels if cat.has_rel_type(t)]
-        return "e", types if info.labels else cat.rel_types()
-    if info.kind == "value":
+    rel = info.kind == "rel" or (info.kind == "value" and info.elem_kind == "rel")
+    known = cat.rel_types() if rel else cat.labels()
+    tables = [t for t in info.labels if t in known] if info.labels else known
+    if info.kind == "value" and len(tables) > 1:
         # FOREACH over collect(n) / UNWIND of an id list: the values are
         # entity ids. collect(n) records the element kind/labels in
         # VarInfo.elem_kind so the update touches only those tables —
@@ -327,21 +366,14 @@ def _candidate_labels(engine, bindings: Bindings, var: str) -> tuple[str, list[s
         # label discriminator column, so an ambiguous (multi-table)
         # resolution cannot be split safely — refuse instead of
         # corrupting (VERDICT r3 "per-label id-space hole").
-        if info.elem_kind == "rel":
-            tables = list(info.labels) if info.labels else cat.rel_types()
-            kind_word = "relationship type"
-        else:
-            tables = list(info.labels) if info.labels else cat.labels()
-            kind_word = "node label"
-        if len(tables) > 1:
-            raise ValueError(
-                f"cannot mutate via {var!r}: it holds bare entity ids with "
-                f"no {kind_word} information and {len(tables)} candidate "
-                f"tables exist (ids are only unique per table). Label the "
-                f"pattern that produced the ids, e.g. MATCH (x:Label)"
-            )
-        return ("e" if info.elem_kind == "rel" else "n"), tables
-    raise ValueError(f"cannot mutate {info.kind} variable {var!r}")
+        raise ValueError(
+            f"cannot mutate via {var!r}: it holds bare entity ids with "
+            f"no {'relationship type' if rel else 'node label'} information "
+            f"and {len(tables)} candidate tables exist (ids are only unique "
+            "per table). Label the pattern that produced the ids, e.g. "
+            "MATCH (x:Label)"
+        )
+    return ("e" if rel else "n"), tables
 
 
 def _label_discriminator(bindings: Bindings, var: str, kind: str) -> str | None:
@@ -380,67 +412,60 @@ def _apply_column_updates(
     params: dict,
     replace_all: bool = False,
 ) -> Bindings:
-    """Upsert-by-join: evaluate per-row values, join into each candidate
-    table on id, write through where matched (classic SET-as-left-join,
-    SURVEY.md §2.10)."""
+    """Upsert-by-join (SURVEY.md §2.10): evaluate each value once into
+    the clause's materialization, join it into each candidate table on
+    id and write through where matched; the bindings carry the stored
+    values forward."""
     cat = engine.catalog
     cc = ExprCompiler(bindings, params, {}, engine.functions)
     kind, tables = _candidate_labels(engine, bindings, var)
-
-    val_cols = [cc.col(expr).alias(f"_set_{key}") for key, expr in updates]
     # ids are only unique *within* a label: when the var spans several
     # tables, split the update frame on the scan's label discriminator so
     # e.g. Person id 1 never writes through to City id 1
     disc = _split_disc(bindings, var, kind, tables)
-    disc_cols = [F.col(disc).alias("_disc")] if disc else []
+    keys = [k for k, _ in updates]
+    vals = [f"_set_{k}" for k in keys]
+    df = bindings.df.select(
+        "*", *[cc.col(expr).alias(v) for v, (_, expr) in zip(vals, updates)]
+    ).localCheckpoint()
     upd = (
-        bindings.df.select(F.col(var).alias(ID), *disc_cols, *val_cols)
+        _keyed(df, var, disc, *vals)
         .dropDuplicates([ID, "_disc"] if disc else [ID])
         .withColumn("_hit", F.lit(True))
     )
 
-    keys = [k for k, _ in updates]
-    for table_name in tables:
-        tdf = cat.nodes(table_name) if kind == "n" else cat.edges(table_name)
-        upd_t = (
-            upd.filter(F.col("_disc") == table_name).drop("_disc") if disc else upd
-        )
+    def upsert(tdf: DataFrame, upd_t: DataFrame) -> DataFrame:
         joined = tdf.join(upd_t, on=ID, how="left")
-        protected = {ID, SRC, DST}
         if replace_all:
             for c in tdf.columns:
-                if c in protected or c in keys:
-                    continue
-                joined = joined.withColumn(
-                    c, F.when(F.col("_hit"), F.lit(None)).otherwise(F.col(c))
-                )
-        for key in keys:
-            new = F.col(f"_set_{key}")
+                if c not in (ID, SRC, DST) and c not in keys:
+                    joined = joined.withColumn(
+                        c, F.when(F.col("_hit"), F.lit(None)).otherwise(F.col(c))
+                    )
+        for key, v in zip(keys, vals):
+            col = F.when(F.col("_hit"), F.col(v))
             if key in tdf.columns:
-                col = F.when(F.col("_hit"), new).otherwise(F.col(key))
-            else:
-                col = F.when(F.col("_hit"), new)
+                col = col.otherwise(F.col(key))
             joined = joined.withColumn(key, col)
-        out = joined.drop("_hit", *[f"_set_{k}" for k in keys])
-        if kind == "n":
-            cat.set_nodes(table_name, out)
-        else:
-            cat.set_edges(table_name, out)
+        return joined.drop("_hit", *vals)
 
-    # refresh the carried satellite columns in the bindings frame
-    df = bindings.df
-    for key, expr in updates:
-        df = df.withColumn(pcol(var, key), cc.col(expr))
-    return bindings.with_df(df)
+    for table_name, upd_t in _by_table(upd, disc, tables).items():
+        _write(cat, kind, table_name, lambda tdf: upsert(tdf, upd_t))
+    carried = {pcol(var, k): F.col(v) for k, v in zip(keys, vals)}
+    if replace_all:  # the map also cleared every property it leaves out
+        carried.update({
+            c: F.lit(None).cast(df.schema[c].dataType)
+            for c in bindings.prop_columns(var) if c not in carried
+        })
+    return bindings.with_df(df.withColumns(carried).drop(*vals))
 
 
 def compile_set(
     engine: "CypherEngine", bindings: Bindings, items: list[SetItem], params: dict
 ) -> Bindings:
-    cat = engine.catalog
     # group prop-sets per variable so one join handles many properties
     by_var: dict[str, list[tuple[str, object]]] = {}
-    order: list[tuple[str, object]] = []
+    others: list[SetItem] = []
     for item in items:
         if item.kind == "prop":
             assert isinstance(item.target, Prop) and isinstance(item.target.target, Var)
@@ -448,11 +473,11 @@ def compile_set(
                 (item.target.key, item.value)
             )
         else:
-            order.append(("special", item))
+            others.append(item)
     for var, updates in by_var.items():
         bindings = _apply_column_updates(engine, bindings, var, updates, params)
 
-    for _, item in order:
+    for item in others:
         var = item.target.name if isinstance(item.target, Var) else None
         if item.kind in ("map_add", "map_replace"):
             pairs = _props_pairs(engine, item.value, params)
@@ -465,9 +490,6 @@ def compile_set(
                 bindings = _set_label(engine, bindings, var, label)
         elif item.kind == "dynamic":
             # SET n[key] = v with a *literal/param* key reduces to a prop set
-            cc = ExprCompiler(bindings, params, {}, engine.functions)
-            from pycypher_nmetl_spark.cypher.ast_nodes import Literal
-
             key_ast = item.key_expr
             if isinstance(key_ast, Param):
                 key = params[key_ast.name]
@@ -484,21 +506,16 @@ def compile_set(
 
 
 def _set_label(engine, bindings: Bindings, var: str, label: str) -> Bindings:
-    """SET n:Label — add the bound nodes (with carried props) to a label."""
-    cat = engine.catalog
-    rows = bindings.df.select(
-        F.col(var).alias(ID),
-        *[
-            F.col(c).alias(c[len(var) + 2 :])
-            for c in bindings.prop_columns(var)
-        ],
-    ).dropDuplicates([ID])
-    if cat.has_label(label):
-        existing = cat.nodes(label)
-        new = rows.join(existing.select(ID), on=ID, how="left_anti")
-        cat.set_nodes(label, existing.unionByName(new, allowMissingColumns=True))
-    else:
-        cat.set_nodes(label, rows)
+    """SET n:Label — add the bound nodes (with carried props) to a label.
+    The rows are materialized after the anti-join: materialized before
+    it, the label table would still enter the new plan twice."""
+    rows = _entity_rows(bindings.df, var, bindings.prop_columns(var))
+
+    def add(old: DataFrame | None) -> DataFrame:
+        new = rows if old is None else rows.join(old.select(ID), on=ID, how="left_anti")
+        return _append(new.localCheckpoint().dropDuplicates([ID]))(old)
+
+    _write(engine.catalog, "n", label, add)
     return bindings
 
 
@@ -508,8 +525,6 @@ def _set_label(engine, bindings: Bindings, var: str, label: str) -> Bindings:
 def compile_remove(
     engine: "CypherEngine", bindings: Bindings, clause: Remove, params: dict
 ) -> Bindings:
-    from pycypher_nmetl_spark.cypher.ast_nodes import Literal
-
     cat = engine.catalog
     for item in clause.items:
         if item.kind == "prop":
@@ -520,18 +535,16 @@ def compile_remove(
             )
         else:  # labels
             var = item.target.name
+            labels = [lb for lb in item.labels if cat.has_label(lb)]
+            if not labels:
+                continue
+            # unlabeled scan: each label loses only the ids whose row came
+            # from it (per-label id spaces — bare-id removal would strip
+            # the label from an unrelated same-id entity)
             disc = _label_discriminator(bindings, var, "n")
-            for label in item.labels:
-                if not cat.has_label(label):
-                    continue
-                idf = bindings.df
-                if disc:
-                    # unlabeled scan: only rows whose provenance is this
-                    # label (per-label id spaces — bare-id removal would
-                    # strip the label from an unrelated same-id entity)
-                    idf = idf.filter(F.col(disc) == label)
-                ids = idf.select(F.col(var).alias(ID)).dropDuplicates()
-                cat.set_nodes(label, cat.nodes(label).join(ids, on=ID, how="left_anti"))
+            _, by_label = _cut_ids(bindings, var, disc, labels)
+            for label in labels:
+                _write(cat, "n", label, _without({ID: by_label[label]}))
     return bindings
 
 
@@ -557,17 +570,7 @@ def compile_delete(
     for expr, (kind, tables) in resolved:
         var = expr.name
         disc = _split_disc(bindings, var, kind, tables)
-        sel = [F.col(var).alias(ID)] + ([F.col(disc).alias("_disc")] if disc else [])
-        ids_all = bindings.df.select(*sel).dropDuplicates().localCheckpoint()
-        if disc:
-            by_label = {
-                t: ids_all.filter(F.col("_disc") == t).drop("_disc") for t in tables
-            }
-            any_ids = ids_all.drop("_disc").dropDuplicates()
-        else:
-            by_label = {t: ids_all for t in tables}
-            any_ids = ids_all
-
+        any_ids, by_label = _cut_ids(bindings, var, disc, tables)
         if kind == "n":
             # edge endpoints are label-scoped: an edge is affected only if
             # its endpoint label is among the deleted labels (unknown
@@ -600,22 +603,16 @@ def compile_delete(
                             "Use DETACH DELETE."
                         )
             for label in tables:
-                cat.set_nodes(label, cat.nodes(label).join(by_label[label], on=ID, how="left_anti"))
+                _write(cat, "n", label, _without({ID: by_label[label]}))
             if clause.detach:
                 for rtype in cat.rel_types():
-                    edf = cat.edges(rtype)
                     src_l, dst_l = cat.edge_endpoints(rtype)
-                    s_ids, d_ids = _endpoint_ids(src_l), _endpoint_ids(dst_l)
-                    if s_ids is None and d_ids is None:
-                        continue
-                    if s_ids is not None:
-                        edf = edf.join(s_ids.select(F.col(ID).alias(SRC)), on=SRC, how="left_anti")
-                    if d_ids is not None:
-                        edf = edf.join(d_ids.select(F.col(ID).alias(DST)), on=DST, how="left_anti")
-                    cat.set_edges(rtype, edf)
+                    ends = {SRC: _endpoint_ids(src_l), DST: _endpoint_ids(dst_l)}
+                    if any(idf is not None for idf in ends.values()):
+                        _write(cat, "e", rtype, _without(ends))
         else:
             for rtype in tables:
-                cat.set_edges(rtype, cat.edges(rtype).join(by_label[rtype], on=ID, how="left_anti"))
+                _write(cat, "e", rtype, _without({ID: by_label[rtype]}))
     return bindings
 
 
@@ -679,17 +676,9 @@ def compile_merge(
     if clause.on_match:
         hit = compile_set(engine, hit, clause.on_match, params)
 
-    # align columns & union the two slices
-    all_cols = list(dict.fromkeys(hit.df.columns + created.df.columns))
-    hdf = hit.df
-    cdf = created.df
-    for c in all_cols:
-        if c not in hdf.columns:
-            hdf = hdf.withColumn(c, F.lit(None))
-        if c not in cdf.columns:
-            cdf = cdf.withColumn(c, F.lit(None))
-    vars_ = {**created.vars, **hit.vars}
-    return Bindings(hdf.select(*all_cols).unionByName(cdf.select(*all_cols)), vars_)
+    # union the two slices; a column only one slice has is null in the other
+    df = hit.df.unionByName(created.df, allowMissingColumns=True)
+    return Bindings(df, {**created.vars, **hit.vars})
 
 
 # ------------------------------------------------------------------------- #

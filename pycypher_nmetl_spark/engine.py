@@ -238,9 +238,9 @@ class CypherEngine:
         return validate_query(cypher, extra_functions=self.functions.keys())
 
     def validate(self, cypher: str, parameters: dict[str, Any] | None = None) -> list[str]:
-        """Static validation: parse + full compile (driver-side Catalyst
-        analysis, no job). Mutations compile against a shadow that is
-        always rolled back. Returns [] when the query is valid."""
+        """Static validation: parse + full compile. Reads run no job; each
+        mutation clause runs its one materialization against a shadow that
+        is always rolled back. Returns [] when the query is valid."""
         from pycypher_nmetl_spark.cypher.tokenizer import CypherSyntaxError
 
         try:

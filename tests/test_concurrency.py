@@ -208,6 +208,38 @@ def test_failed_writer_rolls_back_under_concurrency(ceng):
     assert ceng.execute("MATCH (h:Hub) RETURN count(*) AS c").collect()[0][0] == 1
 
 
+def test_rollback_keeps_other_threads_endpoint_registration(ceng, spark):
+    """Thread A's open transaction registers a new relationship type;
+    thread B's begin + rollback (what every validate() does) must prune
+    only B's own registrations, so A's survives and its commit keeps it."""
+    cat = ceng.catalog
+    a_registered, b_rolled_back = threading.Event(), threading.Event()
+    seen: list = []
+
+    def thread_a():
+        cat.begin()
+        cat.reconcile_edge_endpoints("NEW_REL", ("Item",), ("Hub",))
+        cat.set_edges(
+            "NEW_REL", spark.createDataFrame([(1, 5, 0)], "id long, src long, dst long")
+        )
+        a_registered.set()
+        assert b_rolled_back.wait(60)
+        seen.append(cat.edge_endpoints("NEW_REL"))
+        cat.commit()
+
+    def thread_b():
+        assert a_registered.wait(60)
+        cat.begin()
+        cat.rollback()
+        b_rolled_back.set()
+
+    errors = _run_threads([thread_a, thread_b])
+    assert not errors
+    assert seen == [("Item", "Hub")]
+    assert cat.has_rel_type("NEW_REL")
+    assert cat.edge_endpoints("NEW_REL") == ("Item", "Hub")
+
+
 def test_rate_limiter_under_contention():
     from pycypher_nmetl_spark.guards import RateLimiter, RateLimitExceeded
 

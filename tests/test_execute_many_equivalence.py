@@ -207,6 +207,19 @@ def test_visibility_of_uncommitted_writes_in_txn(erig):
     assert _rows(out[2]) == [(2,)]
 
 
+def test_introspection_sees_uncommitted_writes_in_txn(erig):
+    """db.propertyKeys() reads the transaction's tables like db.labels()
+    does, so a key created earlier in the script is listed."""
+    eng = erig()
+    out = eng.execute_many([
+        "CREATE (:Z {zz: 1})",
+        "CALL db.propertyKeys() YIELD propertyKey RETURN propertyKey",
+        "CALL db.labels() YIELD label RETURN label",
+    ], transactional=True)
+    assert ("zz",) in _rows(out[1])
+    assert ("Z",) in _rows(out[2])
+
+
 def test_atomicity_on_failure(erig):
     """Plain mode: queries before the failing one stay committed.
     Transactional mode: everything rolls back."""

@@ -4,6 +4,8 @@ Reference: mutation_engine.py + tests/test_set_operations_comprehensive.py
 (semantics only; all Spark-side re-implementation).
 """
 
+import pytest
+
 
 def test_create_node(golden, run):
     golden.execute("CREATE (:Person {id: 50, name: 'Eve', age: 22})")
@@ -56,7 +58,11 @@ def test_set_plus_equals_map(golden, run):
 
 
 def test_set_replace_map(golden, run):
-    golden.execute("MATCH (n:Person {name:'Bob'}) SET n = {name: 'Bob', age: 1}")
+    # RETURN shows the replaced map: properties it leaves out are null
+    assert run(
+        "MATCH (n:Person {name:'Bob'}) SET n = {name: 'Bob', age: 1} "
+        "RETURN n.age AS age, n.dept AS dept"
+    ) == [(1, None)]
     assert run(
         "MATCH (n:Person {name:'Bob'}) RETURN n.age AS age, n.dept AS dept"
     ) == [(1, None)]
@@ -267,6 +273,83 @@ def test_create_auto_id_runs_no_extra_jobs(golden):
     # CREATE runs; the old implementation added a dedicated agg(max)
     # job on top (measured: 2 before the fix, 1 after)
     assert jobs == 1, f"CREATE ran {jobs} jobs; expected exactly 1 (no agg(max) job)"
+
+
+@pytest.mark.parametrize("stmt", [
+    "MATCH (n:Person {name:'Bob'}) SET n.age = 26",
+    "MATCH (n:Person {name:'Bob'}) REMOVE n.age",
+    "MATCH (n:Person {name:'Bob'}) SET n:Tag",
+])
+def test_mutation_clause_runs_one_job(golden, stmt):
+    """Each mutation clause materializes exactly one frame: on the
+    registered tables the SET / REMOVE / SET-label write runs one Spark
+    job (its checkpoint), counted in a job group of its own like the
+    CREATE audit above."""
+    sc = golden.spark.sparkContext
+    group = f"mutation-job-probe: {stmt}"
+    sc.setJobGroup(group, "mutation clause job audit")
+    try:
+        golden.execute(stmt)
+    finally:
+        sc.setJobGroup(None, None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group) or [])
+    assert jobs == 1, f"{stmt!r} ran {jobs} jobs; expected exactly 1"
+
+
+@pytest.mark.parametrize("fn", ["rand()", "randomUUID()"])
+@pytest.mark.parametrize("form", ["SET n.r = {}", "SET n += {{r: {}}}"])
+def test_set_nondeterministic_returns_stored_value(golden, fn, form):
+    """A SET value is evaluated once: RETURN shows exactly what a later
+    read finds stored, even for rand() / randomUUID()."""
+    q = f"MATCH (n:Person) {form.format(fn)} RETURN n.name AS name, n.r AS r"
+    returned = sorted(tuple(r) for r in golden.execute(q).collect())
+    stored = sorted(
+        tuple(r)
+        for r in golden.execute(
+            "MATCH (n:Person) RETURN n.name AS name, n.r AS r"
+        ).collect()
+    )
+    assert len(returned) == 4 and returned == stored
+
+
+_SLOTS = "UNWIND range(1, 9) AS k CREATE (:Slot {k: k})"
+_ALICE_AGE = "MATCH (n:Person {name:'Alice'}) RETURN n.age AS v"
+_ALICE_BOB_SINCE = (
+    "MATCH (:Person {name:'Alice'})-[r:KNOWS]->(:Person {name:'Bob'}) "
+    "RETURN r.since AS v"
+)
+_SLOTS_LEFT = "MATCH (n:Slot) RETURN n.k AS v"
+
+
+@pytest.mark.parametrize("setup,stmt,kind,table,check,expected", [
+    (None, "MATCH (n:Person) SET n.age = n.age + 1", "n", "Person", _ALICE_AGE, [(38,)]),
+    (None, "MATCH (n:Person) SET n += {age: n.age + 1}", "n", "Person", _ALICE_AGE, [(38,)]),
+    (None, "MATCH (n:Person) SET n = {name: n.name, age: n.age + 1}", "n", "Person",
+     _ALICE_AGE, [(38,)]),
+    (None, "MATCH (n:Person) REMOVE n.age", "n", "Person", _ALICE_AGE, [(None,)]),
+    (None, "MATCH (n:Person) SET n:Tagged", "n", "Tagged",
+     "MATCH (n:Tagged) RETURN count(*) AS v", [(4,)]),
+    (_SLOTS, "MATCH (n:Slot {k: $i}) REMOVE n:Slot", "n", "Slot", _SLOTS_LEFT, [(9,)]),
+    (None, "MATCH ()-[r:KNOWS]->() SET r.since = r.since + 1", "e", "KNOWS",
+     _ALICE_BOB_SINCE, [(2023,)]),
+    (None, "CREATE (:Person {name: 'p' + toString($i)})", "n", "Person",
+     "MATCH (n:Person) RETURN count(*) AS v", [(12,)]),
+    (_SLOTS, "MATCH (n:Slot {k: $i}) DELETE n", "n", "Slot", _SLOTS_LEFT, [(9,)]),
+], ids=["set", "set_add", "set_replace", "remove_prop", "set_label",
+        "remove_label", "set_rel", "create", "delete"])
+def test_repeated_writes_keep_plan_linear(golden, run, setup, stmt, kind, table, check, expected):
+    """No table is joined to its own lineage: eight writes of one form
+    leave the table's logical plan under 100 lines (joining a table to
+    a scan of itself doubles the plan per write: ~2,500 lines after 8)."""
+    cat = golden.catalog
+    if setup:
+        golden.execute(setup)
+    for i in range(1, 9):
+        golden.execute(stmt, {"i": i})
+        df = cat.nodes(table) if kind == "n" else cat.edges(table)
+        lines = len(df._jdf.queryExecution().logical().toString().strip().splitlines())
+        assert lines < 100, f"plan reached {lines} lines after {i} writes"
+    assert run(check) == expected
 
 
 def test_create_ids_distinct_across_statements_without_agg(golden):
