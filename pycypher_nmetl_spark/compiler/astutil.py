@@ -5,7 +5,10 @@ from __future__ import annotations
 import dataclasses
 from typing import Any, Iterator
 
-from pycypher_nmetl_spark.cypher.ast_nodes import CountStar, Expr, FuncCall
+from pycypher_nmetl_spark.cypher.ast_nodes import (
+    Create, CountStar, Delete, Expr, Foreach, FuncCall, Merge, Remove, SetClause,
+    UnionQuery,
+)
 from pycypher_nmetl_spark.functions.scalar import AGGREGATE_FUNCTIONS
 
 
@@ -54,6 +57,20 @@ def is_nondeterministic(node: Any) -> bool:
         )
         for n in walk(node)
     )
+
+
+#: the clauses that write to the catalog
+MUTATION_CLAUSES = (Create, SetClause, Remove, Delete, Merge, Foreach)
+
+
+def mutates(query: Any) -> bool:
+    """True when a top-level clause of the query (of every UNION branch;
+    a CALL {} branch counts as a query) writes. The package's one write
+    rule: it picks the transaction a query runs in, keeps writes out of
+    the result cache and out of CALL {} bodies, and gates the health
+    server's read-only /query endpoint."""
+    branches = query.branches if isinstance(query, UnionQuery) else [query]
+    return any(isinstance(c, MUTATION_CLAUSES) for b in branches for c in b.clauses)
 
 
 def ast_key(node: Any) -> Any:

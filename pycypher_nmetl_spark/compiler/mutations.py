@@ -3,8 +3,9 @@
 Reference semantics: mutation_engine.py:118-1143, shadow write-back
 binding_frame.py:1487-1777. Spark-first re-expression (SURVEY.md §2.10):
 every mutation produces *new* DataFrames for the touched labels which are
-written into the catalog's shadow dicts; `CypherEngine._execute_query`
-promotes them with an atomic pointer swap at commit.
+written into the catalog's shadow dicts; the engine's one transaction
+rule (`CypherEngine._transaction`) promotes them with an atomic pointer
+swap at commit.
 
 ID allocation (100 TB note): the reference allocates max+1 per table
 sequentially (mutation_engine.py:229-322). We allocate

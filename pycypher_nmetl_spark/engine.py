@@ -15,13 +15,14 @@ commit; any error rolls back by discarding them.
 
 from __future__ import annotations
 
+import contextlib
 from typing import Any, Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pycypher_nmetl_spark.catalog import GraphCatalog
-from pycypher_nmetl_spark.compiler.astutil import is_nondeterministic, walk
+from pycypher_nmetl_spark.compiler.astutil import is_nondeterministic, mutates, walk
 from pycypher_nmetl_spark.compiler.bindings import Bindings, VarInfo
 from pycypher_nmetl_spark.compiler.exprs import ExprCompiler
 from pycypher_nmetl_spark.compiler.patterns import compile_match, materialize_subpatterns
@@ -31,8 +32,6 @@ from pycypher_nmetl_spark.cypher.ast_nodes import (
     Projection, Query, Remove, SetClause, UnionQuery, Unwind,
 )
 from pycypher_nmetl_spark.cypher.parser import parse
-
-MUTATION_CLAUSES = (Create, SetClause, Remove, Delete, Merge, Foreach)
 
 
 def _join_comparable(dt) -> bool:
@@ -150,6 +149,9 @@ class CypherEngine:
         # function? (the AST-level fallback for _plan_deterministic on
         # deployments without plan introspection)
         self._query_nondet = _threading.local()
+        # per-thread: is the open transaction a read snapshot (see
+        # _transaction)?
+        self._snapshot = _threading.local()
         from pycypher_nmetl_spark.audit import EngineMetrics
 
         self.metrics = EngineMetrics()
@@ -240,7 +242,9 @@ class CypherEngine:
     def validate(self, cypher: str, parameters: dict[str, Any] | None = None) -> list[str]:
         """Static validation: parse + full compile. Reads run no job; each
         mutation clause runs its one materialization against a shadow that
-        is always rolled back. Returns [] when the query is valid."""
+        is always rolled back. A write issued inside an open transaction
+        (from a procedure) is refused, since that transaction would commit
+        its writes. Returns [] when the query is valid."""
         from pycypher_nmetl_spark.cypher.tokenizer import CypherSyntaxError
 
         try:
@@ -257,23 +261,21 @@ class CypherEngine:
         errs = self._unknown_read_labels(ast)
         if errs:
             return errs
-        self.catalog.begin()
+        if mutates(ast) and self.catalog.in_transaction():
+            return [
+                "transaction: a write cannot be validated inside an open "
+                "transaction"
+            ]
         try:
-            if isinstance(ast, UnionQuery):
-                for b in ast.branches:
-                    self._run_clauses(b.clauses, params)
-            else:
-                self._run_clauses(ast.clauses, params)
+            # a snapshot even for a write: validate never commits
+            with self._transaction(writes=False):
+                self._run_query(ast, params)
             return []
         except Exception as e:  # noqa: BLE001
             return [f"{type(e).__name__}: {e}"]
-        finally:
-            self.catalog.rollback()
 
     def _unknown_read_labels(self, ast) -> list[str]:
-        from pycypher_nmetl_spark.cypher.ast_nodes import (
-            Create, Match, Merge, NodePattern, RelPattern, UnionQuery,
-        )
+        from pycypher_nmetl_spark.cypher.ast_nodes import NodePattern, RelPattern
 
         errs: list[str] = []
         queries = ast.branches if isinstance(ast, UnionQuery) else [ast]
@@ -400,9 +402,6 @@ class CypherEngine:
         already-compiled — and persisted — leading MATCH run of this
         query; the clause loop resumes after it.
         """
-        import time as _time
-
-        from pycypher_nmetl_spark.audit import audit_event
         from pycypher_nmetl_spark.cache import cache_key
 
         params = parameters or {}
@@ -428,24 +427,51 @@ class CypherEngine:
         if self.rate_limiter is not None:
             self.rate_limiter.acquire()
 
+        result, reusable = self._compile(
+            cypher, params, prefix=_prefix, mixed_ok=_mixed_ok
+        )
+        if key is not None and reusable:
+            # cache the compiled lazy plan (not rows): hits skip parse +
+            # compile; reads stay distributed (reference: result_cache.py)
+            self.cache.put(key, result, self.catalog.data_epoch)
+        return result
+
+    def _compile(
+        self,
+        cypher: str,
+        params: dict,
+        ast=None,
+        prefix: "tuple[int, Bindings] | None" = None,
+        mixed_ok: bool = False,
+    ) -> "tuple[DataFrame, bool]":
+        """The guarded compile every query takes (execute and the
+        transactional execute_many): parse unless ``ast`` is given, the
+        semantic check, the nondeterminism flag, the complexity guard,
+        the clauses inside the transaction rule, the dyn-output decode,
+        then the ``compile`` audit event and the metrics.
+
+        Returns (result, reusable): a result may be served again for the
+        same text and parameters unless the query writes, is
+        non-deterministic, or carries a per-row mixed-output decode tag
+        (which a plain execute() of the same text must not see)."""
+        import time as _time
+
+        from pycypher_nmetl_spark.audit import audit_event
+
         t0 = _time.perf_counter()
         try:
-            ast = parse(cypher)
+            if ast is None:
+                ast = parse(cypher)
             self._semantic_check(ast)
             self._query_nondet.flag = nondet = is_nondeterministic(ast)
             if self.max_complexity is not None:
                 from pycypher_nmetl_spark.guards import check_complexity
 
                 check_complexity(self.catalog, ast, self.max_complexity)
-            if isinstance(ast, UnionQuery):
-                result = self._execute_union(ast, params)
-                mutated = any(
-                    isinstance(c, MUTATION_CLAUSES) for b in ast.branches for c in b.clauses
-                )
-            else:
-                result = self._execute_query(ast, params, prefix=_prefix)
-                mutated = any(isinstance(c, MUTATION_CLAUSES) for c in ast.clauses)
-            result = self._decode_dyn_outputs(result, mixed_ok=_mixed_ok)
+            writes = mutates(ast)
+            with self._transaction(writes):
+                result = self._run_query(ast, params, prefix)
+            result = self._decode_dyn_outputs(result, mixed_ok=mixed_ok)
         except Exception as e:
             self.metrics.inc("queries_failed")
             audit_event(
@@ -455,25 +481,14 @@ class CypherEngine:
             )
             raise
         self.metrics.inc("queries_compiled")
-        if mutated:
-            self.metrics.inc("mutations_committed")
         audit_event(
             "compile", cypher, status="ok",
             elapsed_ms=(_time.perf_counter() - t0) * 1000, parameters=params,
         )
-        if (
-            key is not None
-            and not nondet
-            and not mutated
-            and getattr(result, "_cy_mixed", None) is None
-        ):
-            # cache the compiled lazy plan (not rows): hits skip parse +
-            # compile; reads stay distributed (reference: result_cache.py).
-            # A non-deterministic query must re-evaluate on every call.
-            # Mixed-output frames are NOT cached: they carry a per-row
-            # decode tag a plain execute() of the same text must not see
-            self.cache.put(key, result, self.catalog.data_epoch)
-        return result
+        reusable = not (
+            writes or nondet or getattr(result, "_cy_mixed", None) is not None
+        )
+        return result, reusable
 
     @staticmethod
     def _decode_mixed_rows(df: DataFrame, rows: list) -> list:
@@ -639,8 +654,6 @@ class CypherEngine:
         """Two-level EXPLAIN (reference: query_explainer.py): the clause
         plan our compiler produced, then Catalyst's formatted physical
         plan for the same query."""
-        from pycypher_nmetl_spark.cypher.ast_nodes import Projection
-
         ast = parse(cypher)
         queries = ast.branches if isinstance(ast, UnionQuery) else [ast]
         lines = ["== Cypher clause plan =="]
@@ -729,11 +742,14 @@ class CypherEngine:
         transformations are already fused here, so only the dependency
         sort carries over. With ``transactional=True`` the whole script
         runs in ONE catalog transaction (the closest analogue of the
-        reference's combined execution): every query sees the uncommitted
-        mutations of the queries before it, and either all mutations
-        commit atomically at the end or none do. Equivalence of the two
-        modes (results + final graph state) is pinned by
-        tests/test_execute_many_equivalence.py.
+        reference's combined execution): the script opens it, and each
+        query takes execute()'s guarded compile step, which JOINS the
+        open transaction instead of opening its own. So every query sees
+        the uncommitted mutations of the queries before it, and either
+        all mutations commit atomically at the end or none do; a
+        read-only script runs in one snapshot and commits nothing.
+        Equivalence of the two modes (results + final graph state) is
+        pinned by tests/test_execute_many_equivalence.py.
 
         ``share_scans=True`` (read-only batches only) compiles each
         group of queries with an identical leading MATCH run against ONE
@@ -760,75 +776,18 @@ class CypherEngine:
                 )
             return [results[str(i)] for i in range(len(cyphers))]
 
-        import time as _time
-
-        from pycypher_nmetl_spark.audit import audit_event
-
-        asts = {}
-        for spec in specs:
-            ast = parse(spec.cypher)
-            self._semantic_check(ast)
-            asts[spec.id] = ast
-        has_mutation = any(
-            isinstance(c, MUTATION_CLAUSES)
-            for ast in asts.values()
-            for c in (
-                [cl for b in ast.branches for cl in b.clauses]
-                if isinstance(ast, UnionQuery)
-                else ast.clauses
-            )
-        )
+        asts = {spec.id: parse(spec.cypher) for spec in specs}
         # rate permits for the whole script are taken BEFORE the catalog
         # write lock: sleeping on the limiter while holding the lock
         # would stall every other writer for the rate delay
         if self.rate_limiter is not None:
             for _ in specs:
                 self.rate_limiter.acquire()
-        with self.catalog._write_lock:
-            self.catalog.begin()
-            try:
-                for spec in order_queries(specs):
-                    ast = asts[spec.id]
-                    self._query_nondet.flag = is_nondeterministic(ast)
-                    # the same guard rails execute() applies per query —
-                    # the batch path must not void them
-                    t0 = _time.perf_counter()
-                    try:
-                        if self.max_complexity is not None:
-                            from pycypher_nmetl_spark.guards import check_complexity
-
-                            check_complexity(self.catalog, ast, self.max_complexity)
-                        if isinstance(ast, UnionQuery):
-                            results[spec.id] = self._union_result(ast, params)
-                        else:
-                            results[spec.id] = self._run_clauses(ast.clauses, params)
-                    except Exception as e:
-                        self.metrics.inc("queries_failed")
-                        audit_event(
-                            "compile", spec.cypher, status="error",
-                            elapsed_ms=(_time.perf_counter() - t0) * 1000,
-                            error=e, parameters=params,
-                        )
-                        raise
-                    self.metrics.inc("queries_compiled")
-                    audit_event(
-                        "compile", spec.cypher, status="ok",
-                        elapsed_ms=(_time.perf_counter() - t0) * 1000,
-                        parameters=params,
-                    )
-                # a read-only script must not rewrite the durable
-                # snapshot: versioned parquet save is pure I/O churn
-                # when no shadow write happened
-                self.catalog.commit(
-                    durable_path=self.durable_path if has_mutation else None
+        with self._transaction(any(mutates(a) for a in asts.values())):
+            for spec in order_queries(specs):
+                results[spec.id], _ = self._compile(
+                    spec.cypher, params, asts[spec.id]
                 )
-            except Exception:
-                self.catalog.rollback()
-                raise
-        if has_mutation:
-            self.metrics.inc("mutations_committed")
-            if self.cache is not None:
-                self.cache.clear()
         return [results[str(i)] for i in range(len(cyphers))]
 
     def _plan_shared_scans(
@@ -865,9 +824,7 @@ class CypherEngine:
         asts: dict[str, Query] = {}
         for spec in specs:
             ast = parse(spec.cypher)
-            if isinstance(ast, UnionQuery) or any(
-                isinstance(c, MUTATION_CLAUSES) for c in ast.clauses
-            ):
+            if isinstance(ast, UnionQuery) or mutates(ast):
                 return {}
             asts[spec.id] = ast
 
@@ -891,7 +848,7 @@ class CypherEngine:
                 continue
             sid0 = members[0]
             n = run_len[sid0]
-            with self._read_snapshot():
+            with self._transaction(writes=False):
                 b = Bindings.unit(self.spark)
                 for clause in asts[sid0].clauses[:n]:
                     b = compile_match(self, b, clause, params)
@@ -1050,91 +1007,74 @@ class CypherEngine:
         return n
 
     # ------------------------------------------------------------------ #
-    def _execute_union(self, ast: UnionQuery, params: dict) -> DataFrame:
-        # openCypher forbids mixing UNION and UNION ALL; dedupe iff UNION.
-        # All branches run inside ONE transaction: per-branch transactions
-        # would leave earlier branches' mutations committed if a later
-        # branch fails, breaking the query's atomicity.
-        has_mutation = any(
-            isinstance(c, MUTATION_CLAUSES) for b in ast.branches for c in b.clauses
-        )
-        if not has_mutation:
-            with self._read_snapshot():
-                return self._union_result(ast, params)
-        with self.catalog._write_lock:
+    @contextlib.contextmanager
+    def _transaction(self, writes: bool):
+        """The one transaction rule every query runs under (reference:
+        clause_executor.py:589-608, one atomic scope per query):
+
+        * a thread that already holds a transaction runs inside it — each
+          query of a transactional execute_many, or a query a procedure
+          issues, joins the open scope and commits or rolls back with it;
+        * a read compiles against a snapshot of the catalog pointers
+          (begin, then always roll back), so a concurrent commit — which
+          swaps nodes and edges as two assignments — cannot tear a
+          multi-table read. The plans stay valid after the rollback
+          (DataFrame immutability);
+        * a write serializes on the catalog write lock (so no writer
+          bases its shadow on a stale snapshot), then commits its shadow
+          by an atomic pointer swap (plus the durable snapshot when
+          configured) or discards it on any error.
+
+        A write may not join a read snapshot: the snapshot is always
+        rolled back, so the write would be silently lost."""
+        if self.catalog.in_transaction():
+            if writes and getattr(self._snapshot, "open", False):
+                raise ValueError("a write cannot run inside a read-only query")
+            yield
+        elif not writes:
             self.catalog.begin()
-            try:
-                out = self._union_result(ast, params)
-                self.catalog.commit(durable_path=self.durable_path)
-                return out
-            except Exception:
-                self.catalog.rollback()
-                raise
-
-    def _union_result(self, ast: UnionQuery, params: dict) -> DataFrame:
-        """Run all branches in the CURRENT transaction context and union."""
-        dfs = [self._run_clauses(b.clauses, params) for b in ast.branches]
-        cols0 = dfs[0].columns
-        for df in dfs[1:]:
-            if df.columns != cols0:
-                raise ValueError(
-                    f"UNION branches must project the same columns: {cols0} vs {df.columns}"
-                )
-        out = dfs[0]
-        for df in dfs[1:]:
-            out = out.unionByName(df)
-        if not all(ast.alls):
-            out = out.dropDuplicates()
-        return out
-
-    def _read_snapshot(self):
-        """Context manager: compile reads against a thread-local snapshot
-        of the catalog pointers (begin/rollback, never commit), so a
-        concurrent writer's commit can't tear a multi-table read —
-        `self._nodes` and `self._edges` are swapped as two separate
-        assignments, and a query reads many tables during compile. The
-        returned plans stay valid after rollback (DataFrame immutability).
-        No-op when this thread already holds a transaction (e.g. a read
-        issued from inside a procedure during a mutation)."""
-        import contextlib
-
-        @contextlib.contextmanager
-        def _cm():
-            opened = not self.catalog.in_transaction()
-            if opened:
-                self.catalog.begin()
+            self._snapshot.open = True
             try:
                 yield
             finally:
-                if opened:
-                    self.catalog.rollback()
-
-        return _cm()
-
-    def _execute_query(
-        self, ast: Query, params: dict, prefix: "tuple[int, Bindings] | None" = None
-    ) -> DataFrame:
-        has_mutation = any(isinstance(c, MUTATION_CLAUSES) for c in ast.clauses)
-        if not has_mutation:
-            with self._read_snapshot():
-                if prefix is not None:
-                    n_skip, seed = prefix
-                    return self._run_clauses(
-                        ast.clauses[n_skip:], params, initial=seed
-                    )
-                return self._run_clauses(ast.clauses, params)
-        # mutation transaction: shadow -> atomic swap (or discard on
-        # error); writers serialize on the catalog write lock so a
-        # concurrent writer can't base its shadow on a stale snapshot
-        with self.catalog._write_lock:
-            self.catalog.begin()
-            try:
-                result = self._run_clauses(ast.clauses, params)
-                self.catalog.commit(durable_path=self.durable_path)
-                return result
-            except Exception:
+                self._snapshot.open = False
                 self.catalog.rollback()
-                raise
+        else:
+            with self.catalog._write_lock:
+                self.catalog.begin()
+                try:
+                    yield
+                    self.catalog.commit(durable_path=self.durable_path)
+                except BaseException:
+                    self.catalog.rollback()
+                    raise
+            self.metrics.inc("mutations_committed")
+
+    def _run_query(
+        self, ast, params: dict, prefix: "tuple[int, Bindings] | None" = None
+    ) -> DataFrame:
+        """Run every branch in the current transaction. A UNION's branches
+        must project the same columns; they are unioned by name and, iff
+        no separator is UNION ALL (openCypher forbids mixing the two),
+        deduplicated. ``prefix`` (execute_many share_scans) is a
+        (clauses_to_skip, seed_bindings) pair: the clause loop resumes
+        after the already-compiled leading MATCH run."""
+        if prefix is not None:
+            n_skip, seed = prefix
+            return self._run_clauses(ast.clauses[n_skip:], params, initial=seed)
+        branches = ast.branches if isinstance(ast, UnionQuery) else [ast]
+        dfs = [self._run_clauses(b.clauses, params) for b in branches]
+        out = dfs[0]
+        for df in dfs[1:]:
+            if df.columns != dfs[0].columns:
+                raise ValueError(
+                    "UNION branches must project the same columns: "
+                    f"{dfs[0].columns} vs {df.columns}"
+                )
+            out = out.unionByName(df)
+        if isinstance(ast, UnionQuery) and not all(ast.alls):
+            out = out.dropDuplicates()
+        return out
 
     def _run_clauses(
         self,
@@ -1194,14 +1134,14 @@ class CypherEngine:
     def _subquery_carry_key(
         self, bindings: Bindings, imports, body_nondet: bool
     ):
-        """Shared CALL { } carry-key machinery (single-branch and UNION
-        compilers — round-11 deferred dedup, now extracted): validate
-        imports, then build the hidden per-invocation key ``__cq<depth>``.
+        """CALL { } carry-key machinery: validate imports, then build the
+        hidden per-invocation key ``__cq<depth>``.
 
         The key is DETERMINISTIC whenever possible — a struct of the
         imported variables' columns (maps canonicalized to sorted
         entries) plus enclosing carry keys — so invocation classes dedup
-        and each class evaluates once. Only when the body or the outer
+        and each class evaluates once. Struct equality treats null
+        fields as equal, which makes the re-join null-safe. Only when the body or the outer
         frame is non-deterministic does it fall back to
         monotonically_increasing_id over a localCheckpoint (per-row
         granularity, Neo4j's semantics for such bodies). On deployments
@@ -1287,34 +1227,51 @@ class CypherEngine:
                 )
         return df
 
-    def _compile_call_subquery_union(
+    def _compile_call_subquery(
         self, bindings: Bindings, clause: CallSubquery, params: dict, mutations
     ) -> Bindings:
-        """CALL { branch UNION [ALL] branch ... } — the Neo4j
-        post-union-processing idiom. Each branch carries its OWN
-        importing WITH; the carry key is built over the UNION of all
-        branches' imports (plus enclosing keys), every branch body is
-        compiled against the same deduped inner frame, branch results
-        are ``unionByName``-ed (deduped per invocation unless every
-        separator is UNION ALL) and re-joined onto the invoking rows.
+        """CALL { [WITH imports] ... RETURN items } — Neo4j-4.x subquery,
+        compiled relationally instead of per-row. A plain body is the
+        one-branch case of CALL { branch UNION [ALL] branch ... } (the
+        post-union-processing idiom), so both take this one path:
 
-        A pure-aggregate branch over zero rows still aggregates
-        (Neo4j): such branches are left-joined FROM the key universe
-        with the empty-aggregate identities (count -> 0, sum -> 0,
-        collect -> []) applied BEFORE the union, so the final re-join
-        can always be inner.
+        * every invoking row gets a hidden carry key ``__cq<depth>``
+          over the union of all branches' imports plus any enclosing
+          carry keys (see _subquery_carry_key). A deterministic key
+          dedups the inner frame so each invocation class is evaluated
+          once — an uncorrelated ``CALL { ... }`` runs exactly once; a
+          non-deterministic outer frame or body keys each invoking ROW,
+          Neo4j's granularity for such bodies;
+        * each branch compiles against a frame holding ONLY the carry
+          key + its OWN imports (+ enclosing keys): another branch's
+          import columns riding along would collide when this branch
+          freshly binds a variable of the same name (legal per Neo4j
+          scoping). compile_projection recognises ``__cq*`` vars and (a)
+          always carries them through WITH/RETURN, (b) adds them to
+          every implicit grouping and DISTINCT, and (c) turns SKIP/LIMIT
+          into a per-carry-key row_number window — which together
+          reproduce per-invocation semantics in one plan;
+        * the final RETURN is rewritten to a WITH so the result keeps the
+          carry key. An invocation over zero rows still aggregates
+          (Neo4j), so a pure-aggregate branch is left-joined FROM the
+          key universe with the empty-aggregate identities (count -> 0,
+          sum -> 0, collect -> []); branch results are ``unionByName``-ed
+          (deduped per invocation unless every separator is UNION ALL)
+          and re-joined INNER onto the invoking rows (zero subquery rows
+          eliminate the invoking row, per Neo4j).
+
+        Writes inside the subquery are not supported (raise).
         """
         import dataclasses
 
         from pycypher_nmetl_spark.compiler.projection import contains_aggregate
 
-        branches = clause.branches or []
+        branches = clause.branches or [clause]
         for br in branches:
-            for c in br.clauses:
-                if isinstance(c, MUTATION_CLAUSES):
-                    raise NotImplementedError(
-                        "writes inside CALL { } subqueries are not supported"
-                    )
+            if mutates(br):
+                raise NotImplementedError(
+                    "writes inside CALL { } subqueries are not supported"
+                )
             last = br.clauses[-1]
             if not (isinstance(last, Projection) and last.is_return):
                 raise ValueError("CALL { } subquery must end with RETURN")
@@ -1344,10 +1301,6 @@ class CypherEngine:
             body = list(br.clauses)
             last = body[-1]
             body[-1] = dataclasses.replace(last, is_return=False)
-            # each branch sees ONLY the key + its OWN imports (+
-            # enclosing keys): another branch's import columns riding
-            # along would collide when this branch freshly binds a
-            # variable of the same name (legal per Neo4j scoping)
             own = [key] + [
                 c for v in br.imports for c in bindings.var_columns(v)
             ] + list(enclosing)
@@ -1357,6 +1310,9 @@ class CypherEngine:
                 if result is not None:  # pragma: no cover
                     raise AssertionError("subquery RETURN escaped the rewrite")
             exported = [(it.alias or it.text) for it in last.items]
+            # enclosing subqueries' carry keys rode through the body (they
+            # key the inner groupings); the OUTER frame already has them —
+            # drop the copies before the re-join to avoid ambiguity
             b_df = b.df.drop(
                 *[c for c in b.df.columns if c.startswith("__cq") and c != key]
             )
@@ -1373,7 +1329,8 @@ class CypherEngine:
                 contains_aggregate(it.expr) for it in last.items
             )
             if pure_agg:
-                # zero-row invocation still aggregates: restore the key
+                # the inner projection's own coalesces only fire when the
+                # key has at least one inner row; restore the missing keys
                 # then apply the empty-aggregate identities
                 b_df = key_universe.join(b_df, key, "left")
                 b_df = self._apply_empty_agg_identities(
@@ -1396,133 +1353,15 @@ class CypherEngine:
                 .drop("__cu_dd")
             )
 
-        clash = [v for v in (exported0 or []) if v in bindings.vars]
+        clash = [v for v in exported0 if v in bindings.vars]
         if clash:
             raise ValueError(
                 f"CALL subquery returns variable(s) already in scope: {clash}"
             )
         joined = outer_df.join(union_df, key, "inner")
         out_vars = {**bindings.vars}
-        for v in exported0 or []:
+        for v in exported0:
             out_vars[v] = first_vars[v]
-        return Bindings(joined.drop(key), out_vars)
-
-    def _compile_call_subquery(
-        self, bindings: Bindings, clause: CallSubquery, params: dict, mutations
-    ) -> Bindings:
-        """CALL { [WITH imports] ... RETURN items } — Neo4j-4.x subquery,
-        compiled relationally instead of per-row:
-
-        * every invoking row gets a hidden carry key ``__cq<depth>``.
-          The key is DETERMINISTIC whenever possible: a struct of the
-          imported variables' columns plus any enclosing carry keys
-          (the subquery's result is a pure function of those, so rows
-          sharing a key share a result — the inner frame is deduped on
-          the key and each invocation class is evaluated once; an
-          uncorrelated ``CALL { ... }`` therefore runs exactly once).
-          Struct equality in Spark treats null fields as equal, which
-          gives the null-safe join the re-join needs. Map-typed imports
-          (not join-comparable in Spark) are serialized to a canonical
-          sorted-entries array inside the key. Only when the outer frame
-          or the body is NON-DETERMINISTIC (rand()/randomUUID()) does it
-          fall back to monotonically_increasing_id over a
-          localCheckpoint — the id keys each invoking ROW, which is also
-          exactly Neo4j's per-row granularity for non-deterministic
-          bodies;
-        * the subquery's clauses compile against a frame holding ONLY the
-          carry key + imported variables — compile_projection recognises
-          ``__cq*`` vars and (a) always carries them through WITH/RETURN,
-          (b) adds them to every implicit grouping and DISTINCT, and
-          (c) turns SKIP/LIMIT into a per-carry-key row_number window —
-          which together reproduce per-invocation semantics in one plan;
-        * the final RETURN is rewritten to a WITH so the result keeps the
-          carry key, then joins back onto the invoking rows. A pure-
-          aggregate RETURN joins LEFT (an invocation over zero rows still
-          aggregates — count() coalesces to 0); anything else joins INNER
-          (zero subquery rows eliminate the invoking row, per Neo4j).
-
-        Writes inside the subquery are not supported (raise); UNION
-        between branches dispatches to _compile_call_subquery_union.
-        """
-        if clause.branches:
-            return self._compile_call_subquery_union(
-                bindings, clause, params, mutations
-            )
-        import dataclasses
-
-        from pycypher_nmetl_spark.compiler.projection import contains_aggregate
-        from pycypher_nmetl_spark.cypher.ast_nodes import Var
-
-        body = list(clause.clauses)
-        for c in body:
-            if isinstance(c, MUTATION_CLAUSES):
-                raise NotImplementedError(
-                    "writes inside CALL { } subqueries are not supported"
-                )
-        last = body[-1]
-        if not (isinstance(last, Projection) and last.is_return):
-            raise ValueError("CALL { } subquery must end with RETURN")
-
-        # Both the outer frame and the subquery body must be deterministic
-        # for the shared-key design (outer_df is evaluated independently
-        # on the two sides of the re-join; dedup of invocation classes
-        # assumes the body yields identical results for identical
-        # imports). rand()/uuid() on either side -> checkpointed-id path.
-        key, outer_df, outer, _import_cols, enclosing, inner_df = (
-            self._subquery_carry_key(
-                bindings, clause.imports, is_nondeterministic(body)
-            )
-        )
-        # inner scope: carry key + imported vars (with satellite columns);
-        # carry keys of ENCLOSING subqueries ride along too (nesting)
-        inner_vars = {key: VarInfo("value", anon=True)}
-        for v in clause.imports:
-            inner_vars[v] = outer.vars[v]
-        for v in enclosing:
-            inner_vars[v] = bindings.vars[v]
-        inner = Bindings(inner_df, inner_vars)
-
-        # run the body; final RETURN becomes a WITH so the carry key and
-        # satellite columns survive into the result frame
-        body[-1] = dataclasses.replace(last, is_return=False)
-        b = inner
-        for c in body:
-            b, result = self._run_clause(c, b, params, mutations)
-            if result is not None:  # pragma: no cover — rewritten above
-                raise AssertionError("subquery RETURN escaped the rewrite")
-
-        exported = [
-            (it.alias or it.text) for it in last.items
-        ]
-        clash = [v for v in exported if v in bindings.vars]
-        if clash:
-            raise ValueError(
-                f"CALL subquery returns variable(s) already in scope: {clash}"
-            )
-
-        pure_agg = bool(last.items) and all(
-            contains_aggregate(it.expr) for it in last.items
-        )
-        how = "left" if pure_agg else "inner"
-        # enclosing subqueries' carry keys rode through the body (they
-        # key the inner groupings); the OUTER frame already has them —
-        # drop the copies before the re-join to avoid ambiguity
-        b_df = b.df.drop(
-            *[c for c in b.df.columns if c.startswith("__cq") and c != key]
-        )
-        joined = outer_df.join(b_df, key, how)
-        if pure_agg:
-            # An invocation over zero rows still aggregates. The inner
-            # projection's own coalesces (sum -> 0, collect_list -> [])
-            # only fire when the carry key has at least one inner row;
-            # a key with NO row at all comes back from the left join as
-            # all-null, so re-apply Neo4j's empty-aggregate identities
-            joined = self._apply_empty_agg_identities(
-                joined, last.items, exported
-            )
-        out_vars = {**bindings.vars}
-        for v in exported:
-            out_vars[v] = b.vars.get(v, VarInfo("value"))
         return Bindings(joined.drop(key), out_vars)
 
     # ------------------------------------------------------------------ #

@@ -134,21 +134,16 @@ class HealthServer:
 
     @staticmethod
     def _mutates(cypher: str) -> bool:
-        """True when any clause (in any UNION branch) writes. Parse
-        failures return False — execute() raises the real error with a
-        proper message rather than a misleading 403."""
-        from pycypher_nmetl_spark.cypher.ast_nodes import UnionQuery
+        """True when the query writes (astutil.mutates). Parse failures
+        return False — execute() raises the real error with a proper
+        message rather than a misleading 403."""
+        from pycypher_nmetl_spark.compiler.astutil import mutates
         from pycypher_nmetl_spark.cypher.parser import parse
-        from pycypher_nmetl_spark.engine import MUTATION_CLAUSES
 
         try:
-            ast = parse(cypher)
+            return mutates(parse(cypher))
         except Exception:  # noqa: BLE001
             return False
-        queries = ast.branches if isinstance(ast, UnionQuery) else [ast]
-        return any(
-            isinstance(c, MUTATION_CLAUSES) for q in queries for c in q.clauses
-        )
 
     def start(self) -> "HealthServer":
         self._thread = threading.Thread(target=self._server.serve_forever, daemon=True)

@@ -930,8 +930,8 @@ def union_queries(draw) -> QuerySpec:
 
     Per-column expression families are fixed across branches so both
     engines agree on column types; Cypher requires identical column
-    names (x0..xn) in every branch. Exercises engine._execute_union
-    (previously fixed-query tested only)."""
+    names (x0..xn) in every branch. Exercises the UNION case of
+    engine._run_query (previously fixed-query tested only)."""
     all_kw = draw(st.booleans())
     fams = draw(
         st.lists(st.sampled_from(["int", "str"]), min_size=1, max_size=2)

@@ -7,7 +7,7 @@ tests/load_testing/test_concurrent_queries.py, test_error_resilience.py):
   * read-write: readers never observe a torn commit — a single statement
     that creates a node AND its edge must be visible all-or-nothing
     (the commit pointer-swaps nodes and edges as two assignments; reads
-    compile against a thread-local snapshot, engine._read_snapshot);
+    compile against a thread-local snapshot, engine._transaction);
   * write-write: concurrent mutation transactions serialize on the
     catalog write lock — no lost updates from stale shadow snapshots;
   * rate limiter under contention rejects the overflow.

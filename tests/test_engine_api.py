@@ -24,9 +24,36 @@ def test_validate_undefined_variable(golden):
     assert len(errs) == 1 and "'m'" in errs[0]
 
 
+def test_validate_union_column_mismatch(golden):
+    # validate runs the same query runner as execute(), so it reports
+    # the UNION column check instead of accepting the query
+    errs = golden.validate(
+        "MATCH (p:Person) RETURN p.name AS n "
+        "UNION MATCH (q:Person) RETURN q.age AS m"
+    )
+    assert len(errs) == 1
+    assert "UNION branches must project the same columns" in errs[0]
+
+
 def test_validate_mutation_rolls_back(golden, run):
     assert golden.validate("CREATE (:Person {id: 77, name: 'Ghost'})") == []
     assert run("MATCH (n:Person) RETURN count(*) AS c") == [(4,)]
+
+
+def test_validate_write_inside_open_transaction(golden, run):
+    """validate() never writes: a write validated from a procedure of a
+    write query is refused, and the outer query still commits."""
+    def check(engine, args):
+        errs = engine.validate("CREATE (:V {x: 1})")
+        return engine.spark.createDataFrame([(len(errs),)], "n long")
+
+    golden.register_procedure("my.check", check)
+    assert run(
+        "CREATE (:Person {id: 5, name: 'Eve'}) WITH 1 AS one "
+        "CALL my.check() YIELD n RETURN n"
+    ) == [(1,)]
+    assert run("MATCH (n:V) RETURN count(*) AS c") == [(0,)]
+    assert run("MATCH (n:Person) RETURN count(*) AS c") == [(5,)]
 
 
 def test_register_pandas_function(golden):

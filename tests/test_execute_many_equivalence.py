@@ -220,6 +220,26 @@ def test_introspection_sees_uncommitted_writes_in_txn(erig):
     assert ("Z",) in _rows(out[2])
 
 
+@pytest.mark.parametrize(
+    "query",
+    [
+        "RETURN [1, 'a'][1] AS y",
+        "WITH [1, 'a'] AS l RETURN l[0] AS x",
+        "MATCH (p:Person) WITH p, [p.age, p.name] AS l RETURN l[0] AS a",
+    ],
+    ids=["literal_index", "with_list", "property_list"],
+)
+def test_transactional_decodes_mixed_list_outputs(erig, query):
+    """An element of a mixed-type list is dyn-encoded inside the compile;
+    a transactional script must decode its outputs exactly as execute()
+    does (same schema and rows), not return the struct encoding."""
+    eng = erig()
+    plain = eng.execute(query)
+    (txn,) = eng.execute_many([query], transactional=True)
+    assert txn.schema == plain.schema
+    assert _rows(txn) == _rows(plain)
+
+
 def test_atomicity_on_failure(erig):
     """Plain mode: queries before the failing one stay committed.
     Transactional mode: everything rolls back."""

@@ -149,6 +149,35 @@ def test_rollback_on_error(golden, run):
     assert run("MATCH (n:Person {name:'Alice'}) RETURN n.age AS age") == [(30,)]
 
 
+def _register_write_proc(golden):
+    def write(engine, args):
+        engine.execute("CREATE (:B {v: 1})")
+        return engine.spark.createDataFrame([(True,)], "ok boolean")
+
+    golden.register_procedure("my.write", write)
+
+
+def test_write_inside_write_query_commits_with_it(golden, run):
+    """A query a procedure issues joins the caller's open transaction, so
+    the outer CREATE and the procedure's CREATE commit together (a fresh
+    transaction would replace the outer shadow and drop the outer write)."""
+    _register_write_proc(golden)
+    assert run(
+        "CREATE (:A {x: 1}) WITH 1 AS one CALL my.write() YIELD ok RETURN ok"
+    ) == [(True,)]
+    assert run("MATCH (n:A) RETURN count(*) AS c") == [(1,)]
+    assert run("MATCH (n:B) RETURN count(*) AS c") == [(1,)]
+
+
+def test_write_inside_read_query_raises(golden, run):
+    """A read runs in a snapshot that is always rolled back: a write
+    issued inside it is refused rather than silently lost."""
+    _register_write_proc(golden)
+    with pytest.raises(ValueError, match="read-only"):
+        golden.execute("CALL my.write() YIELD ok RETURN ok")
+    assert run("MATCH (n:B) RETURN count(*) AS c") == [(0,)]
+
+
 # --------------------------------------------------------------------- #
 # round-4: durable commit — parquet snapshot + crash-consistent reload
 # --------------------------------------------------------------------- #
