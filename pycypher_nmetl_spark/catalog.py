@@ -229,17 +229,42 @@ class GraphCatalog:
     def commit(self, durable_path: str | None = None) -> None:
         """Promote shadows to canonical tables (atomic pointer swap).
 
-        Reference: relational_models.py:647-668 (commit_query). With
-        ``durable_path`` the committed state is additionally persisted
-        via :meth:`save_durable` (crash-consistent parquet snapshot).
+        Reference: relational_models.py:647-668 (commit_query). Every
+        committed table is one materialized relation, so no read replays
+        the joins and unions of the writes that produced it. Without
+        ``durable_path`` each shadow table that differs from its
+        canonical frame is replaced by one ``localCheckpoint`` *before*
+        the swap, on the caller's thread (its jobs join the caller's job
+        group, described ``compact <kind>:<name>``); if that raises, the
+        caller rolls back and the canonical tables are untouched. With
+        ``durable_path`` the committed state is persisted via
+        :meth:`save_durable` (crash-consistent parquet snapshot), which
+        re-points every table at the parquet it wrote.
         """
         if self.in_transaction():
+            if durable_path is None:
+                self._compact("n", self._tl.nodes, self._nodes)
+                self._compact("e", self._tl.edges, self._edges)
             self._nodes = self._tl.nodes
             self._edges = self._tl.edges
             self.data_epoch += 1
         self._tl.nodes = self._tl.edges = self._tl.new_types = None
         if durable_path is not None:
             self.save_durable(durable_path)
+
+    def _compact(self, kind: str, shadow: dict, canonical: dict) -> None:
+        """Replace, in ``shadow``, every frame that is not its canonical
+        one with its local checkpoint. Written straight into the dict:
+        the bookkeeping of set_nodes/set_edges already ran at the write."""
+        sc = self.spark.sparkContext
+        previous = sc.getLocalProperty("spark.job.description")
+        try:
+            for name, df in shadow.items():
+                if df is not canonical.get(name):
+                    sc.setJobDescription(f"compact {kind}:{name}")
+                    shadow[name] = df.localCheckpoint()
+        finally:
+            sc.setLocalProperty("spark.job.description", previous)
 
     # ------------------------------------------------------------------ #
     # durable snapshots (SURVEY §1.3 durability story: at cluster scale

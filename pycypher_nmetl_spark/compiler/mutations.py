@@ -23,10 +23,16 @@ REMOVE of a property, the bindings plus the evaluated values; DELETE and
 REMOVE of a label, the bound ids; SET of a label, the rows the label
 gains. MERGE and FOREACH are composed of these. So every value (a fresh
 id, ``rand()``, ``randomUUID()``) is computed once, RETURN sees exactly
-what was stored, and no table is joined to its own lineage: a table's
-plan grows by a constant per write instead of doubling. At production
-scale the materialization would be a Delta/parquet write; the checkpoint
-is its local-mode stand-in.
+what was stored, and no table is joined to its own lineage. SET applies
+its items left to right: a later item sees what an earlier one stored,
+and the last write per key wins.
+
+Commit rule: the commit replaces every table the transaction wrote with
+one materialized relation (``GraphCatalog.commit``), so a committed
+table's plan is a single node whatever its write history, and within a
+transaction a table's plan grows only by the clauses of that
+transaction. At production scale both materializations would be
+Delta/parquet writes; the checkpoints are their local-mode stand-in.
 """
 
 from __future__ import annotations
@@ -405,32 +411,62 @@ def _split_disc(bindings: Bindings, var: str, kind: str, tables: list[str]) -> s
         )
     return disc
 
-def _apply_column_updates(
+def _set_properties(
     engine: "CypherEngine",
     bindings: Bindings,
-    var: str,
-    updates: list[tuple[str, object]],
+    assignments: list[tuple[str, list[tuple[str, object]], bool]],
     params: dict,
-    replace_all: bool = False,
 ) -> Bindings:
-    """Upsert-by-join (SURVEY.md §2.10): evaluate each value once into
-    the clause's materialization, join it into each candidate table on
-    id and write through where matched; the bindings carry the stored
-    values forward."""
-    cat = engine.catalog
-    cc = ExprCompiler(bindings, params, {}, engine.functions)
+    """Property writes of one clause, applied left to right (SURVEY.md
+    §2.10). Each assignment ``(var, [(key, value_ast)], replace_all)``
+    evaluates its values against the bindings as the assignments before
+    it left them, and overwrites ``var``'s property columns there; a
+    ``replace_all`` map also clears every property it leaves out. The
+    result is materialized once, then each variable's final values are
+    upserted by join on id into each candidate table."""
+    df = bindings.df
+    keys: dict[str, dict[str, None]] = {}  # var -> the keys it sets, in order
+    replaced: set[str] = set()  # vars a replace-all map cleared
+    for var, pairs, replace_all in assignments:
+        view = bindings.with_df(df)
+        cc = ExprCompiler(view, params, {}, engine.functions)
+        values = {pcol(var, k): cc.col(expr) for k, expr in pairs}
+        if replace_all:
+            replaced.add(var)
+            keys[var] = {}
+            types = {f.name: f.dataType for f in df.schema}
+            values = {
+                **{c: F.lit(None).cast(types[c]) for c in view.prop_columns(var)},
+                **values,
+            }
+        keys.setdefault(var, {}).update(dict.fromkeys(k for k, _ in pairs))
+        df = df.withColumns(values)
+    df = df.localCheckpoint()
+    for var, set_keys in keys.items():
+        if set_keys or var in replaced:
+            _write_properties(
+                engine, bindings.with_df(df), var, list(set_keys), var in replaced
+            )
+    return bindings.with_df(df)
+
+
+def _write_properties(
+    engine: "CypherEngine", bindings: Bindings, var: str, keys: list[str],
+    replace_all: bool,
+) -> None:
+    """Upsert ``var``'s (materialized) ``keys`` into each candidate table
+    by a join on id; with ``replace_all`` the rows hit also lose every
+    other property."""
     kind, tables = _candidate_labels(engine, bindings, var)
     # ids are only unique *within* a label: when the var spans several
     # tables, split the update frame on the scan's label discriminator so
     # e.g. Person id 1 never writes through to City id 1
     disc = _split_disc(bindings, var, kind, tables)
-    keys = [k for k, _ in updates]
     vals = [f"_set_{k}" for k in keys]
-    df = bindings.df.select(
-        "*", *[cc.col(expr).alias(v) for v, (_, expr) in zip(vals, updates)]
-    ).localCheckpoint()
     upd = (
-        _keyed(df, var, disc, *vals)
+        _keyed(bindings.df, var, disc, *[
+            F.col(pcol(var, k)).alias(v) for k, v in zip(keys, vals)
+        ])
         .dropDuplicates([ID, "_disc"] if disc else [ID])
         .withColumn("_hit", F.lit(True))
     )
@@ -451,44 +487,28 @@ def _apply_column_updates(
         return joined.drop("_hit", *vals)
 
     for table_name, upd_t in _by_table(upd, disc, tables).items():
-        _write(cat, kind, table_name, lambda tdf: upsert(tdf, upd_t))
-    carried = {pcol(var, k): F.col(v) for k, v in zip(keys, vals)}
-    if replace_all:  # the map also cleared every property it leaves out
-        carried.update({
-            c: F.lit(None).cast(df.schema[c].dataType)
-            for c in bindings.prop_columns(var) if c not in carried
-        })
-    return bindings.with_df(df.withColumns(carried).drop(*vals))
+        _write(engine.catalog, kind, table_name, lambda tdf: upsert(tdf, upd_t))
 
 
 def compile_set(
     engine: "CypherEngine", bindings: Bindings, items: list[SetItem], params: dict
 ) -> Bindings:
-    # group prop-sets per variable so one join handles many properties
-    by_var: dict[str, list[tuple[str, object]]] = {}
-    others: list[SetItem] = []
+    """SET: the property items share one materialization
+    (:func:`_set_properties`), then each label item adds its label."""
+    assignments: list[tuple[str, list[tuple[str, object]], bool]] = []
+    labels: list[SetItem] = []
     for item in items:
         if item.kind == "prop":
             assert isinstance(item.target, Prop) and isinstance(item.target.target, Var)
-            by_var.setdefault(item.target.target.name, []).append(
-                (item.target.key, item.value)
+            assignments.append(
+                (item.target.target.name, [(item.target.key, item.value)], False)
             )
-        else:
-            others.append(item)
-    for var, updates in by_var.items():
-        bindings = _apply_column_updates(engine, bindings, var, updates, params)
-
-    for item in others:
-        var = item.target.name if isinstance(item.target, Var) else None
-        if item.kind in ("map_add", "map_replace"):
-            pairs = _props_pairs(engine, item.value, params)
-            bindings = _apply_column_updates(
-                engine, bindings, var, pairs, params,
-                replace_all=(item.kind == "map_replace"),
-            )
-        elif item.kind == "labels":
-            for label in item.labels:
-                bindings = _set_label(engine, bindings, var, label)
+        elif item.kind in ("map_add", "map_replace"):
+            assignments.append((
+                item.target.name,
+                _props_pairs(engine, item.value, params),
+                item.kind == "map_replace",
+            ))
         elif item.kind == "dynamic":
             # SET n[key] = v with a *literal/param* key reduces to a prop set
             key_ast = item.key_expr
@@ -498,11 +518,16 @@ def compile_set(
                 key = key_ast.value
             else:
                 raise NotImplementedError("dynamic SET key must be literal or parameter")
-            bindings = _apply_column_updates(
-                engine, bindings, var, [(key, item.value)], params
-            )
+            assignments.append((item.target.name, [(key, item.value)], False))
+        elif item.kind == "labels":
+            labels.append(item)
         else:
             raise NotImplementedError(f"SET item {item.kind}")
+    if assignments:
+        bindings = _set_properties(engine, bindings, assignments, params)
+    for item in labels:
+        for label in item.labels:
+            bindings = _set_label(engine, bindings, item.target.name, label)
     return bindings
 
 
@@ -527,14 +552,14 @@ def compile_remove(
     engine: "CypherEngine", bindings: Bindings, clause: Remove, params: dict
 ) -> Bindings:
     cat = engine.catalog
+    props = [
+        (item.target.target.name, [(item.target.key, Literal(None))], False)
+        for item in clause.items if item.kind == "prop"
+    ]
+    if props:
+        bindings = _set_properties(engine, bindings, props, params)
     for item in clause.items:
-        if item.kind == "prop":
-            prop: Prop = item.target
-            var = prop.target.name
-            bindings = _apply_column_updates(
-                engine, bindings, var, [(prop.key, Literal(None))], params
-            )
-        else:  # labels
+        if item.kind != "prop":  # labels
             var = item.target.name
             labels = [lb for lb in item.labels if cat.has_label(lb)]
             if not labels:

@@ -99,13 +99,15 @@ def _rows_estimate(catalog, kind: str, name: str) -> float | None:
     """Driver-side row estimate for a table: registered row_estimate if
     provided, else Catalyst sizeInBytes / 100B-per-row (no job runs).
 
-    The first plausible estimate is cached on the table's metadata —
-    after mutations the table is a join-product plan whose sizeInBytes
-    is a multiplied-out upper bound (measured: 7e18 for a 2-row table
-    after one SET), useless as a row estimate; the pre-mutation number
-    stays representative. Estimates above ~1e12 rows are treated as
-    unknown for the same reason — a genuinely that-large table should
-    register an explicit row_estimate."""
+    The estimate is cached on the table's metadata for the data epoch
+    it was derived at. A written table's estimate is that of the plan
+    that wrote it (a commit's local checkpoint keeps its source plan's
+    statistics), and after a SET that plan is a join whose sizeInBytes
+    can be a multiplied-out upper bound (measured: 7e18 for a 2-row
+    table after one SET), useless as a row estimate. Estimates above
+    ~1e12 rows are therefore treated as unknown and the previous
+    estimate is kept — a genuinely that-large table should register an
+    explicit row_estimate."""
     meta = catalog._meta.get((kind, name))
     epoch = getattr(catalog, "data_epoch", 0)
     if meta is not None and meta.row_estimate:

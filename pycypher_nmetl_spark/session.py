@@ -43,6 +43,11 @@ def get_spark(
         )
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
+        # PySpark otherwise records the Python call site of every F.* /
+        # Column call (several py4j round trips each, plus a stack walk);
+        # the site would be a compiler line, which tells a Cypher user
+        # nothing
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # driver testdata writes TIMESTAMP(NANOS) parquet, which Spark's
         # reader rejects; read as long and convert at the catalog layer
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -520,9 +520,11 @@ def run_script(eng, script):
 # ------------------------------------------------------------------ #
 # read ops (round-5): differential reads over POST-MUTATION state.
 # propgen's read fuzzers all run against clean registered tables; after
-# a mutation the catalog tables are shadow/join-product plan chains
-# where optimizer paths (FK-collapse, guards, pushdown) behave
-# differently — this family caught the cross-join-guard false refusal.
+# a mutation commit the catalog tables are local checkpoints (no parquet
+# scan, no FK collapse for the tables written) where optimizer paths
+# (FK-collapse, guards, pushdown) behave differently — this family
+# caught the cross-join-guard false refusal, back when committed tables
+# were join-product plan chains.
 # ------------------------------------------------------------------ #
 @dataclass
 class ReadOp:

@@ -178,3 +178,24 @@ def test_query_http_endpoint_mutations_opt_in(golden):
         )
     finally:
         srv.stop()
+
+
+def test_column_calls_skip_origin_capture(spark, monkeypatch):
+    """get_spark turns off PySpark's per-call origin capture: building a
+    Column sends the JVM no PySparkCurrentOrigin set/clear round trip."""
+    import py4j.java_gateway
+    from pyspark.sql import functions as F
+
+    F.col("a").alias("b")  # resolve PySpark's one-time debugging flag
+    sent = []
+    send = py4j.java_gateway.GatewayClient.send_command
+
+    def counted(client, command, *args, **kwargs):
+        sent.append(command)
+        return send(client, command, *args, **kwargs)
+
+    monkeypatch.setattr(py4j.java_gateway.GatewayClient, "send_command", counted)
+    F.col("a").alias("b")
+    monkeypatch.undo()
+    assert sent, "the Column calls crossed into the JVM unobserved"
+    assert not [c for c in sent if "PySparkCurrentOrigin" in c], sent

@@ -281,48 +281,171 @@ def test_durable_reload_survives_pruning(spark, tmp_path):
     ).collect()[0][0] == 4
 
 
-def test_create_auto_id_runs_no_extra_jobs(golden):
-    """Auto-id CREATE advances the id base from block arithmetic, not an
-    agg(max).collect() — exactly the jobs for the localCheckpoint and
-    none after (round-6 verdict item 4). The CREATE runs inside a
-    dedicated job group so the count is immune to the statusTracker's
+def _job_audit(golden, stmt, monkeypatch):
+    """Run ``stmt`` in a job group of its own and return (the number of
+    jobs its clauses ran, the description of every commit compaction).
+    The group keeps the count immune to the statusTracker's
     retained-jobs eviction (global before/after deltas go wrong once the
-    session has run > spark.ui.retainedJobs jobs — full-suite flake)."""
+    session has run > spark.ui.retainedJobs jobs — full-suite flake).
+    The commit compacts each table it changed under the job description
+    ``compact <kind>:<name>``, so the status store tells its jobs apart
+    (one compaction may run several jobs: AQE submits each query stage
+    as a job); the compactions themselves are counted where they
+    checkpoint."""
     sc = golden.spark.sparkContext
+    DataFrame = type(golden.spark.range(1))  # the session's concrete class
+    compactions = []
+    checkpoint = DataFrame.localCheckpoint
 
-    tracker = sc.statusTracker()
-    golden.execute("CREATE (:JobProbe {v: 1})")  # warm the path
-    sc.setJobGroup("create-job-probe", "auto-id CREATE job audit")
-    try:
-        golden.execute("CREATE (:JobProbe {v: 2})")
-    finally:
-        sc.setJobGroup(None, None)
-    jobs = len(tracker.getJobIdsForGroup("create-job-probe") or [])
-    # localCheckpoint materialization is the ONLY action an auto-id
-    # CREATE runs; the old implementation added a dedicated agg(max)
-    # job on top (measured: 2 before the fix, 1 after)
-    assert jobs == 1, f"CREATE ran {jobs} jobs; expected exactly 1 (no agg(max) job)"
+    def counted(df, *args, **kwargs):
+        desc = sc.getLocalProperty("spark.job.description") or ""
+        if desc.startswith("compact "):
+            compactions.append(desc)
+        return checkpoint(df, *args, **kwargs)
 
-
-@pytest.mark.parametrize("stmt", [
-    "MATCH (n:Person {name:'Bob'}) SET n.age = 26",
-    "MATCH (n:Person {name:'Bob'}) REMOVE n.age",
-    "MATCH (n:Person {name:'Bob'}) SET n:Tag",
-])
-def test_mutation_clause_runs_one_job(golden, stmt):
-    """Each mutation clause materializes exactly one frame: on the
-    registered tables the SET / REMOVE / SET-label write runs one Spark
-    job (its checkpoint), counted in a job group of its own like the
-    CREATE audit above."""
-    sc = golden.spark.sparkContext
+    monkeypatch.setattr(DataFrame, "localCheckpoint", counted)
     group = f"mutation-job-probe: {stmt}"
-    sc.setJobGroup(group, "mutation clause job audit")
+    sc.setJobGroup(group, "mutation job audit")
     try:
         golden.execute(stmt)
     finally:
         sc.setJobGroup(None, None)
-    jobs = len(sc.statusTracker().getJobIdsForGroup(group) or [])
+        monkeypatch.undo()
+    store = sc._jsc.sc().statusStore()
+    descs = [
+        store.job(j).description()
+        for j in sc.statusTracker().getJobIdsForGroup(group) or []
+    ]
+    clause_jobs = sum(
+        1 for d in descs if not (d.isDefined() and d.get().startswith("compact "))
+    )
+    return clause_jobs, compactions
+
+
+def test_create_auto_id_runs_no_extra_jobs(golden, monkeypatch):
+    """Auto-id CREATE advances the id base from block arithmetic, not an
+    agg(max).collect() — exactly the jobs for the localCheckpoint and
+    none after (round-6 verdict item 4), plus the commit's one
+    compaction of the table it wrote."""
+    golden.execute("CREATE (:JobProbe {v: 1})")  # warm the path
+    jobs, compactions = _job_audit(golden, "CREATE (:JobProbe {v: 2})", monkeypatch)
+    # localCheckpoint materialization is the ONLY action an auto-id
+    # CREATE runs; the old implementation added a dedicated agg(max)
+    # job on top (measured: 2 before the fix, 1 after)
+    assert jobs == 1, f"CREATE ran {jobs} jobs; expected exactly 1 (no agg(max) job)"
+    assert compactions == ["compact n:JobProbe"]
+
+
+@pytest.mark.parametrize("stmt,table", [
+    pytest.param(stmt, table, id=stmt) for stmt, table in [
+        ("MATCH (n:Person {name:'Bob'}) SET n.age = 26", "n:Person"),
+        ("MATCH (n:Person {name:'Bob'}) SET n.age = 1, n.salary = n.age + 1", "n:Person"),
+        ("MATCH (n:Person {name:'Bob'}) REMOVE n.age", "n:Person"),
+        ("MATCH (n:Person {name:'Bob'}) SET n:Tag", "n:Tag"),
+    ]
+])
+def test_mutation_clause_runs_one_job(golden, monkeypatch, stmt, table):
+    """Each mutation clause materializes exactly one frame: on the
+    registered tables the SET / REMOVE / SET-label write runs one Spark
+    job (its checkpoint), and the commit compacts the one table it
+    changed exactly once."""
+    jobs, compactions = _job_audit(golden, stmt, monkeypatch)
     assert jobs == 1, f"{stmt!r} ran {jobs} jobs; expected exactly 1"
+    assert compactions == [f"compact {table}"]
+
+
+def test_set_items_apply_left_to_right(run):
+    """A later SET item sees what the earlier ones stored (openCypher):
+    salary is computed from the age set just before it, not Bob's 25."""
+    assert run(
+        "MATCH (n:Person {name:'Bob'}) SET n.age = 1, n.salary = n.age + 1 "
+        "RETURN n.age AS a, n.salary AS s"
+    ) == [(1, 2.0)]
+    assert run("MATCH (n:Person {name:'Bob'}) RETURN n.age AS a, n.salary AS s") == [
+        (1, 2.0)
+    ]
+    run("MATCH (n:Person {name:'Bob'}) SET n += {age: 5}, n.salary = n.age * 2")
+    assert run("MATCH (n:Person {name:'Bob'}) RETURN n.salary AS s") == [(10.0,)]
+
+
+def test_set_same_key_twice_last_wins(run):
+    assert run(
+        "MATCH (n:Person {name:'Bob'}) SET n.age = 1, n.age = 2 RETURN n.age AS a"
+    ) == [(2,)]
+    assert run("MATCH (n:Person {name:'Bob'}) RETURN n.age AS a") == [(2,)]
+    # a map that replaces all properties clears the key set before it
+    run("MATCH (n:Person {name:'Bob'}) SET n.age = 3, n = {name: 'Bob'}, n.dept = 'X'")
+    assert run(
+        "MATCH (n:Person {name:'Bob'}) RETURN n.age AS a, n.dept AS d, n.salary AS s"
+    ) == [(None, "X", None)]
+
+
+def test_commits_leave_flat_tables(golden, run):
+    """Every commit leaves each table it wrote as one materialized
+    relation: over 100 commits mixing CREATE, SET and DELETE on one
+    label, its logical plan is one line after each, and its rows end
+    equal to a plain-Python model of the same writes."""
+    cat = golden.catalog
+    model = {r[0]: r[1] for r in run("MATCH (n:Person) RETURN n.name, n.age")}
+    for i in range(100):
+        step = i % 4
+        if step == 0:
+            golden.execute("CREATE (:Person {name: $n, age: $i})", {"n": f"p{i}", "i": i})
+            model[f"p{i}"] = i
+        elif step == 1:
+            golden.execute(
+                "MATCH (n:Person) WHERE n.age % 3 = $r SET n.age = n.age + 1",
+                {"r": i % 3},
+            )
+            model = {
+                k: (v + 1 if v is not None and v % 3 == i % 3 else v)
+                for k, v in model.items()
+            }
+        elif step == 2:
+            golden.execute("CREATE (:Person {name: $n, age: $i})", {"n": f"q{i}", "i": i})
+            model[f"q{i}"] = i
+        else:
+            golden.execute("MATCH (n:Person {name: $n}) DELETE n", {"n": f"p{i - 3}"})
+            del model[f"p{i - 3}"]
+        assert _logical_lines(cat.nodes("Person")) == 1, f"after commit {i}"
+    assert run("MATCH (n:Person) RETURN n.name, n.age") == sorted(model.items(), key=repr)
+
+
+def test_failed_compaction_leaves_canonical_tables(golden, run, monkeypatch):
+    """A commit whose compaction raises rolls back: every canonical
+    frame is the very object it was before, and the epoch is unchanged.
+    The failure hits the second of the three tables DETACH DELETE
+    writes, after the first one's compaction succeeded."""
+    cat = golden.catalog
+    sc = golden.spark.sparkContext
+    DataFrame = type(golden.spark.range(1))  # the session's concrete class
+    before = {
+        **{("n", t): cat.nodes(t) for t in cat.labels()},
+        **{("e", t): cat.edges(t) for t in cat.rel_types()},
+    }
+    epoch = cat.data_epoch
+    checkpoint = DataFrame.localCheckpoint
+    compactions = []
+
+    def failing(df, *args, **kwargs):
+        if (sc.getLocalProperty("spark.job.description") or "").startswith("compact "):
+            compactions.append(df)
+            if len(compactions) == 2:
+                raise RuntimeError("compaction failed")
+        return checkpoint(df, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", failing)
+    with pytest.raises(RuntimeError, match="compaction failed"):
+        golden.execute("MATCH (n:Person {name:'Alice'}) DETACH DELETE n")
+    monkeypatch.undo()
+    after = {
+        **{("n", t): cat.nodes(t) for t in cat.labels()},
+        **{("e", t): cat.edges(t) for t in cat.rel_types()},
+    }
+    assert after.keys() == before.keys()
+    assert all(after[k] is before[k] for k in before)
+    assert cat.data_epoch == epoch
+    assert run("MATCH (n:Person) RETURN count(*) AS c") == [(4,)]
 
 
 @pytest.mark.parametrize("fn", ["rand()", "randomUUID()"])
@@ -350,6 +473,10 @@ _ALICE_BOB_SINCE = (
 _SLOTS_LEFT = "MATCH (n:Slot) RETURN n.k AS v"
 
 
+def _logical_lines(df) -> int:
+    return len(df._jdf.queryExecution().logical().toString().strip().splitlines())
+
+
 @pytest.mark.parametrize("setup,stmt,kind,table,check,expected", [
     (None, "MATCH (n:Person) SET n.age = n.age + 1", "n", "Person", _ALICE_AGE, [(38,)]),
     (None, "MATCH (n:Person) SET n += {age: n.age + 1}", "n", "Person", _ALICE_AGE, [(38,)]),
@@ -375,8 +502,7 @@ def test_repeated_writes_keep_plan_linear(golden, run, setup, stmt, kind, table,
         golden.execute(setup)
     for i in range(1, 9):
         golden.execute(stmt, {"i": i})
-        df = cat.nodes(table) if kind == "n" else cat.edges(table)
-        lines = len(df._jdf.queryExecution().logical().toString().strip().splitlines())
+        lines = _logical_lines(cat.nodes(table) if kind == "n" else cat.edges(table))
         assert lines < 100, f"plan reached {lines} lines after {i} writes"
     assert run(check) == expected
 
