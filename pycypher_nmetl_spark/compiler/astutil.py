@@ -3,11 +3,13 @@
 from __future__ import annotations
 
 import dataclasses
+from collections import Counter
 from typing import Any, Iterator
 
 from pycypher_nmetl_spark.cypher.ast_nodes import (
-    Create, CountStar, Delete, Expr, Foreach, FuncCall, Merge, Remove, SetClause,
-    UnionQuery,
+    Create, CountStar, Delete, Expr, Foreach, FuncCall, MapLit, MapProjection,
+    Merge, NodePattern, PathPattern, Projection, Prop, QuantPathPattern,
+    RelPattern, Remove, SetClause, UnionQuery, Var,
 )
 from pycypher_nmetl_spark.functions.scalar import AGGREGATE_FUNCTIONS
 
@@ -71,6 +73,55 @@ def mutates(query: Any) -> bool:
     server's read-only /query endpoint."""
     branches = query.branches if isinstance(query, UnionQuery) else [query]
     return any(isinstance(c, MUTATION_CLAUSES) for b in branches for c in b.clauses)
+
+
+def property_uses(queries: Any) -> dict[str, frozenset[str]]:
+    """{name: the property keys the variable reads} over the queries'
+    UNION branches and subquery bodies. The package's one property-use
+    rule: scans bind only these properties (patterns._bound_props).
+
+    Fail-safe: an absent name reads every property. A name is left out
+    when its set cannot be proven: a bare use (``RETURN n``, ``count(n)``,
+    ``WITH n AS m``, ``n[k]``, ``properties(n)``), a ``n{.*}`` or ``{v}``
+    map-projection item, a ``$param`` property map, an element of a named
+    or quantified path, a name the query does not spell (``_anon*``,
+    ``_vl*``, qpp.py's renames). A mutating query or a ``*`` projection
+    gives {}. A property read off a non-variable (``startNode(r).k``)
+    adds its key to every set."""
+    uses: dict[str, set[str]] = {}
+    bare: Counter = Counter()  # Var occurrences that are not a Prop target
+    every: set[str] = set()
+    extra: set[str] = set()
+    for n in walk(queries):
+        if isinstance(n, MUTATION_CLAUSES) or (isinstance(n, Projection) and n.star):
+            return {}
+        if isinstance(n, Var):
+            bare[n.name] += 1
+        elif isinstance(n, Prop) and isinstance(n.target, Var):
+            uses.setdefault(n.target.name, set()).add(n.key)
+            bare[n.target.name] -= 1
+        elif isinstance(n, Prop):
+            extra.add(n.key)
+        elif isinstance(n, MapProjection):
+            for kind, payload in n.items:
+                if kind == "prop":
+                    uses.setdefault(n.var, set()).add(payload)
+                elif kind in ("all", "var"):
+                    every.add(n.var if kind == "all" else payload)
+        elif isinstance(n, (NodePattern, RelPattern)):
+            # _ensure_var writes _anon names into the (cached) AST
+            if n.var and not n.var.startswith("_anon"):
+                keys = uses.setdefault(n.var, set())
+                if isinstance(n.props, MapLit):
+                    keys.update(k for k, _ in n.props.pairs)
+                elif n.props is not None:
+                    every.add(n.var)
+        elif isinstance(n, PathPattern) and (
+            n.var or any(isinstance(e, QuantPathPattern) for e in n.elements)
+        ):
+            every.update(e.var for e in walk(n.elements) if hasattr(e, "var"))
+    every.update(v for v, cnt in bare.items() if cnt > 0)
+    return {v: frozenset(k | extra) for v, k in uses.items() if v not in every}
 
 
 def ast_key(node: Any) -> Any:

@@ -4,8 +4,9 @@ variables, plus a scope describing what each variable is.
 Column conventions (the whole engine hangs off these):
 
   * node variable ``n``   -> column ``n`` (entity id), property columns
-    ``n__<prop>`` carried from the scan (Catalyst prunes unused ones),
-    optional ``n__label`` when the scan spanned multiple labels;
+    ``n__<prop>`` for the properties the query reads
+    (astutil.property_uses), optional ``n__label`` when the scan
+    spanned multiple labels;
   * rel variable ``r``    -> column ``r`` (edge id), ``r__src``,
     ``r__dst``, ``r__type`` (when multi-type), plus ``r__<prop>``;
   * value variable ``x``  -> column ``x``;
@@ -13,8 +14,8 @@ Column conventions (the whole engine hangs off these):
 
 Reference equivalent: BindingFrame
 (reference: packages/pycypher/src/pycypher/binding_frame.py:249-297) —
-but properties ride along instead of being fetched by ID-keyed lookup
-(binding_frame.py:429-885), because column pruning makes that free.
+but the properties a query reads ride along from the scan instead of
+being fetched by ID-keyed lookup (binding_frame.py:429-885).
 """
 
 from __future__ import annotations
@@ -91,9 +92,6 @@ class Bindings:
             pcol(var, "label"), pcol(var, "__sw"),
         }
         return [c for c in self.df.columns if c.startswith(prefix) and c not in skip]
-
-    def has_prop(self, var: str, prop: str) -> bool:
-        return pcol(var, prop) in self.df.columns
 
     def dtype(self, column: Column) -> T.DataType:
         """Probe the Spark type of an expression against this frame

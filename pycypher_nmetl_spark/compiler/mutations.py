@@ -44,8 +44,9 @@ from pyspark.sql import functions as F
 
 from pycypher_nmetl_spark.compiler.bindings import Bindings, VarInfo, fresh_name, pcol
 from pycypher_nmetl_spark.compiler.exprs import ExprCompiler
+from pycypher_nmetl_spark.compiler.patterns import compile_match, prop_pairs
 from pycypher_nmetl_spark.cypher.ast_nodes import (
-    Create, Delete, Foreach, Literal, MapLit, Match, Merge, NodePattern, Param,
+    Create, Delete, Foreach, Literal, Match, Merge, NodePattern, Param,
     Prop, Remove, RelPattern, SetClause, SetItem, Var,
 )
 
@@ -178,21 +179,6 @@ def _cut_ids(bindings: Bindings, var: str, disc: str | None, tables: list[str]):
     return ids.drop("_disc"), _by_table(ids, disc, tables)
 
 
-def _props_pairs(engine, props, params) -> list[tuple[str, object]]:
-    """Property map of a pattern -> [(key, value_expr_ast)]; supports
-    inline maps and `$param` maps (literalized driver-side)."""
-    if props is None:
-        return []
-    if isinstance(props, MapLit):
-        return list(props.pairs)
-    if isinstance(props, Param):
-        value = params.get(props.name)
-        if not isinstance(value, dict):
-            raise ValueError(f"${props.name} must be a map for a property pattern")
-        return [(k, Literal(v)) for k, v in value.items()]
-    raise ValueError(f"unsupported property map {type(props).__name__}")
-
-
 # ------------------------------------------------------------------------- #
 # CREATE (mutation_engine.py:459-617)
 # ------------------------------------------------------------------------- #
@@ -236,7 +222,7 @@ def _create_nodes(
     known = cat.has_label(label)
 
     cc = ExprCompiler(bindings, params, {}, engine.functions)
-    pairs = _props_pairs(engine, np.props, params)
+    pairs = prop_pairs(np.props, params)
     explicit_id = next((expr for key, expr in pairs if key == ID), None)
     if explicit_id is not None:
         # an `id` property IS the entity id in our data model
@@ -321,7 +307,7 @@ def _create_edges(
     )
     df = df.withColumn(pcol(rvar, "src"), F.col(src_var))
     df = df.withColumn(pcol(rvar, "dst"), F.col(dst_var))
-    for key, expr_ast in _props_pairs(engine, rel.props, params):
+    for key, expr_ast in prop_pairs(rel.props, params):
         df = df.withColumn(pcol(rvar, key), cc.col(expr_ast))
     df = df.localCheckpoint()
     _advance_id_base(cat, "e", rtype, df, base_max, rvar)
@@ -430,7 +416,13 @@ def _set_properties(
     for var, pairs, replace_all in assignments:
         view = bindings.with_df(df)
         cc = ExprCompiler(view, params, {}, engine.functions)
-        values = {pcol(var, k): cc.col(expr) for k, expr in pairs}
+        # carry each value in the type the table's upsert stores:
+        # when(_hit, new).otherwise(old) (see _write_properties)
+        bound = set(df.columns)
+        values = {
+            c: F.when(F.lit(True), v).otherwise(df[c]) if c in bound else v
+            for c, v in ((pcol(var, k), cc.col(expr)) for k, expr in pairs)
+        }
         if replace_all:
             replaced.add(var)
             keys[var] = {}
@@ -506,7 +498,7 @@ def compile_set(
         elif item.kind in ("map_add", "map_replace"):
             assignments.append((
                 item.target.name,
-                _props_pairs(engine, item.value, params),
+                prop_pairs(item.value, params),
                 item.kind == "map_replace",
             ))
         elif item.kind == "dynamic":
@@ -651,8 +643,6 @@ def compile_merge(
     """Match-else-create without per-row branching: OPTIONAL-match the
     pattern, split on null, CREATE for the unmatched slice, union back
     (the two-phase join+anti-join plan from SURVEY.md §7.3)."""
-    from pycypher_nmetl_spark.compiler.patterns import compile_match
-
     path = clause.path
     # name every pattern element so we can split/reunite frames
     for el in path.elements:

@@ -4,7 +4,8 @@ Reference semantics: pattern_matcher.py:152-798, frame_joiner.py:70-310.
 Spark-first re-expression (SURVEY.md §2.4):
 
   * node scan            -> ``nodes_df.select(id AS var, props AS var__p)``
-                            (+ broadcast hint for small dimension labels);
+                            of the props the query reads (+ broadcast
+                            hint for small dimension labels);
   * fixed hop            -> equi-join bindings.prev == edges.src, promote
                             ``dst`` to the next variable, then join the
                             endpoint label table for its properties;
@@ -34,12 +35,13 @@ from typing import TYPE_CHECKING
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pycypher_nmetl_spark.compiler.astutil import walk
+from pycypher_nmetl_spark.compiler.astutil import property_uses, walk
 from pycypher_nmetl_spark.compiler.bindings import Bindings, VarInfo, fresh_name, pcol
 from pycypher_nmetl_spark.compiler.exprs import ExprCompiler
 from pycypher_nmetl_spark.cypher.ast_nodes import (
-    BoolOp, ExistsSub, ListComp, Match, NodePattern, Not, PathPattern,
-    PatternComp, PatternPred, Quantifier, Reduce, RelPattern, Var,
+    BoolOp, ExistsSub, ListComp, Literal, MapLit, Match, NodePattern, Not,
+    Param, PathPattern, PatternComp, PatternPred, QuantPathPattern,
+    Quantifier, Reduce, RelPattern, Var,
 )
 
 
@@ -135,16 +137,38 @@ def entity_prop_col(df: DataFrame, var: str, key: str):
 
 
 def prop_pairs(props, params) -> list:
-    """(key, expr) pairs from an inline `{k: v}` map or a `$param` map
-    (openCypher parameter property maps in patterns, round-9 TCK)."""
-    from pycypher_nmetl_spark.cypher.ast_nodes import Literal, Param
-
+    """(key, expr) pairs from a pattern's or a SET map's property map:
+    none, an inline `{k: v}` map, or a `$param` map (openCypher
+    parameter property maps, round-9 TCK; literalized driver-side)."""
+    if props is None:
+        return []
+    if isinstance(props, MapLit):
+        return list(props.pairs)
     if isinstance(props, Param):
         value = params.get(props.name)
         if not isinstance(value, dict):
             raise ValueError(f"${props.name} must be a map for a property pattern")
         return [(k, Literal(v)) for k, v in value.items()]
-    return list(props.pairs)
+    raise ValueError(f"unsupported property map {type(props).__name__}")
+
+
+def _bound_props(
+    engine: "CypherEngine", var: str, table: str, df: DataFrame,
+    structural: tuple[str, ...],
+) -> list:
+    """The property columns of ``table`` a scan binds, as ``var__p``: the
+    keys astutil.property_uses gives ``var`` (all when it gives none),
+    plus the fk_prop of each catalog.fk_collapse registration ``table``
+    owns, which _try_fk_collapse reads."""
+    keys = engine._query.uses.get(var)
+    if keys is not None:
+        cat = engine.catalog
+        fks = (cat.fk_collapse(rt) for rt in cat.rel_types())
+        keys = keys | {fk[2] for fk in fks if fk and fk[0] == table}
+    return [
+        F.col(c).alias(pcol(var, c)) for c in df.columns
+        if c not in structural and (keys is None or c in keys)
+    ]
 
 
 def node_scan(
@@ -174,8 +198,7 @@ def node_scan(
         for extra in labels[1:]:
             df = df.join(cat.nodes(extra).select("id"), on="id", how="left_semi")
         out = df.select(
-            F.col("id").alias(var),
-            *[F.col(c).alias(pcol(var, c)) for c in df.columns if c != "id"],
+            F.col("id").alias(var), *_bound_props(engine, var, labels[0], df, ("id",))
         )
         if cat.is_broadcastable("n", labels[0]):
             out = F.broadcast(out)
@@ -189,7 +212,7 @@ def node_scan(
             df.select(
                 F.col("id").alias(var),
                 F.lit(label).alias(pcol(var, "label")),
-                *[F.col(c).alias(pcol(var, c)) for c in df.columns if c != "id"],
+                *_bound_props(engine, var, label, df, ("id",)),
             )
         )
     if not frames:
@@ -214,11 +237,7 @@ def edge_scan(engine: "CypherEngine", rvar: str, types: list[str]) -> tuple[Data
         ]
         if len(use_types) > 1:
             cols.append(F.lit(t).alias(pcol(rvar, "type")))
-        cols += [
-            F.col(c).alias(pcol(rvar, c))
-            for c in df.columns
-            if c not in ("id", "src", "dst")
-        ]
+        cols += _bound_props(engine, rvar, t, df, ("id", "src", "dst"))
         frames.append(df.select(*cols))
     out = frames[0]
     for f in frames[1:]:
@@ -250,8 +269,6 @@ def build_path_frame(
     rel_vars: list[tuple[str, tuple[str, ...]]] = []
     var_preds = var_preds or {}
     applied = applied if applied is not None else set()
-
-    from pycypher_nmetl_spark.cypher.ast_nodes import QuantPathPattern
 
     if any(isinstance(e, QuantPathPattern) for e in elements):
         from pycypher_nmetl_spark.compiler.qpp import build_qpp_path_frame
@@ -957,13 +974,13 @@ def apply_rel_uniqueness(
 # MATCH clause
 # ---------------------------------------------------------------------- #
 def elide_id_only_seed(
-    p: PathPattern, known_vars: dict, refs: set[str]
+    p: PathPattern, known_vars: dict, uses: dict
 ) -> PathPattern:
     """Mark a path's node elements ``id_only`` when their var is already
     bound in ``known_vars`` — a frame the built path will be joined back
     to on that id, which re-enforces existence and label — and nothing
-    in the enclosing clause (``refs``: every Var mentioned in the
-    clause's paths / WHERE / projection) reads more than the node's id.
+    in the enclosing clause reads more than its id (``uses``, the
+    property uses of the clause's paths / WHERE / projection, is empty).
     Applies to the seed, intermediate and terminal positions alike: a
     bound, unreferenced node's table join contributes only an existence
     check that the later merge on its id repeats.
@@ -977,8 +994,6 @@ def elide_id_only_seed(
     a var repeated within the path (cyclic back-reference) keeps its
     scan."""
     import dataclasses as _dc
-
-    from pycypher_nmetl_spark.cypher.ast_nodes import QuantPathPattern
 
     if not (
         p.var is None
@@ -1002,7 +1017,7 @@ def elide_id_only_seed(
             isinstance(f, NodePattern)
             and f.var is not None
             and f.var in known_vars
-            and f.var not in refs
+            and uses.get(f.var) == frozenset()
             and not f.props
             and f.where is None
             and node_vars.count(f.var) == 1
@@ -1026,14 +1041,8 @@ def compile_match(
     var_preds, residual = split_pushable_predicates(m.where, set(bindings.vars))
     applied: set[str] = set()
 
-    # Every var the clause references beyond a bare pattern mention
-    # (prop maps, inline WHEREs, the clause WHERE) — a seed whose var
-    # appears here still needs its property columns, so its scan stays.
-    clause_refs: set[str] = set()
-    for _f in list(m.paths) + ([m.where] if m.where is not None else []):
-        for _n in walk(_f):
-            if isinstance(_n, Var):
-                clause_refs.add(_n.name)
+    # a seed whose properties the clause reads keeps its scan
+    uses = property_uses([m.paths, m.where])
 
     # Build each path frame independently, merge on shared vars — the
     # declarative plan lets Catalyst reorder the resulting join tree.
@@ -1043,7 +1052,7 @@ def compile_match(
         known = dict(bindings.vars)
         if combined is not None:
             known.update(combined.vars)
-        path = elide_id_only_seed(path, known, clause_refs)
+        path = elide_id_only_seed(path, known, uses)
         frame, rel_vars = build_path_frame(
             engine, path, bindings, params, var_preds, applied
         )
@@ -1099,8 +1108,7 @@ def apply_residual_where(engine, frame: Bindings, residual: list, params: dict) 
         hit = _bare_exists_pred(e)
         if hit is not None:
             paths, where, neg = hit
-            refs = _sub_refs(paths, where)
-            sub = _build_exists_frame(engine, frame, paths, where, refs, params)
+            sub = _build_exists_frame(engine, frame, paths, where, params)
             shared = [v for v in sub.vars if v in frame.vars]
             if shared:
                 how = "left_anti" if neg else "left_semi"
@@ -1120,35 +1128,23 @@ def apply_residual_where(engine, frame: Bindings, residual: list, params: dict) 
 # ---------------------------------------------------------------------- #
 # EXISTS / pattern predicates / pattern comprehensions
 # ---------------------------------------------------------------------- #
-def _sub_refs(paths, where, extra=()) -> set[str]:
-    """Every var a subquery references (paths, WHERE, extra fragments)."""
-    refs: set[str] = set()
-    frags: list = list(paths)
-    if where is not None:
-        frags.append(where)
-    frags.extend(extra)
-    for _f in frags:
-        for _n in walk(_f):
-            if isinstance(_n, Var):
-                refs.add(_n.name)
-    return refs
-
-
 def _build_exists_frame(
     engine: "CypherEngine",
     bindings: Bindings,
     paths: list,
     where,
-    refs: set[str],
     params: dict,
+    extra=None,
 ) -> Bindings:
     """Compile an EXISTS/pattern subquery's paths (+ inner WHERE) into a
     frame correlated with ``bindings`` — the shared build behind both the
-    flag-column and the left_semi/left_anti compilations.  ``refs`` gates
-    the seed-scan elision (see materialize_subpatterns docstring)."""
+    flag-column and the left_semi/left_anti compilations.  The property
+    uses of the paths, WHERE and ``extra`` (a comprehension's projection)
+    gate the seed-scan elision (see materialize_subpatterns)."""
+    uses = property_uses([paths, where, extra])
     sub: Bindings | None = None
     for p in paths:
-        p = elide_id_only_seed(p, bindings.vars, refs)
+        p = elide_id_only_seed(p, bindings.vars, uses)
         frame, _rel_vars = build_path_frame(engine, p, bindings, params)
         sub = frame if sub is None else _merge(sub, frame, "inner", engine)
     sub = apply_rel_uniqueness(sub, [])
@@ -1191,18 +1187,11 @@ def materialize_subpatterns(
             paths = node.paths if isinstance(node, ExistsSub) else [node.path]
             where = node.where if isinstance(node, ExistsSub) else None
 
-        # Seed-scan elision: a path seed that is SHARED with the outer
-        # frame and never referenced beyond its id (no props map, no
-        # inline WHERE, no mention in the subquery WHERE / projection /
-        # other elements' prop maps) does not need its node scan — the
-        # flag join back to the outer frame can only match ids the
-        # outer's own scan produced, so existence and label are already
-        # enforced there. build_path_frame additionally requires the
-        # first edge's registered join-side label to prove the label
-        # before it actually elides (falls back to the scan otherwise).
-        extra = (node.projection,) if isinstance(node, PatternComp) else ()
-        refs = _sub_refs(paths, where, extra)
-        sub = _build_exists_frame(engine, bindings, paths, where, refs, params)
+        # a comprehension's projection also gates the seed-scan elision
+        # (elide_id_only_seed): the flag join back to the outer frame
+        # re-enforces the seed's existence and label
+        extra = node.projection if isinstance(node, PatternComp) else None
+        sub = _build_exists_frame(engine, bindings, paths, where, params, extra)
 
         shared = [v for v in sub.vars if v in bindings.vars]
         if isinstance(node, PatternComp):

@@ -40,7 +40,7 @@ from typing import TYPE_CHECKING
 
 from pyspark.sql import functions as F
 
-from pycypher_nmetl_spark.compiler.astutil import walk
+from pycypher_nmetl_spark.compiler.astutil import property_uses
 from pycypher_nmetl_spark.compiler.bindings import Bindings, VarInfo, fresh_name
 from pycypher_nmetl_spark.cypher.ast_nodes import (
     BoolOp, MapLit, NodePattern, PathPattern, QuantPathPattern, RelPattern,
@@ -290,18 +290,21 @@ def _expand_combo(
 
     # Repetition-boundary nodes are internal (pfx-renamed, dropped after
     # the union); when nothing reads them beyond their id — no props map,
-    # no inline WHERE reference; group arrays consume bare ids — mark
-    # them id_only so the hop compiler binds them from the edge endpoint
-    # column instead of joining the node table (patterns._expand honors
-    # the flag only when the edge registration proves the label).
-    where_refs = {n.name for n in walk(out_wheres) if isinstance(n, Var)}
+    # no property use in the inline WHEREs; group arrays consume bare
+    # ids — mark them id_only so the hop compiler binds them from the
+    # edge endpoint column instead of joining the node table
+    # (patterns._expand honors the flag only when the edge registration
+    # proves the label).
+    uses = property_uses([chain.elements, out_wheres])
     for idx, el in enumerate(chain.elements):
         if (
             idx > 0  # element 0 seeds the scan, never an _expand target
             and isinstance(el, NodePattern)
-            and (el.var is None or el.var.startswith(pfx))
             and el.props is None
-            and el.var not in where_refs
+            and (
+                el.var is None
+                or (el.var.startswith(pfx) and uses.get(el.var) == frozenset())
+            )
         ):
             chain.elements[idx] = dataclasses.replace(el, id_only=True)
     return (

@@ -16,13 +16,16 @@ commit; any error rolls back by discarding them.
 from __future__ import annotations
 
 import contextlib
+import threading
 from typing import Any, Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pycypher_nmetl_spark.catalog import GraphCatalog
-from pycypher_nmetl_spark.compiler.astutil import is_nondeterministic, mutates, walk
+from pycypher_nmetl_spark.compiler.astutil import (
+    is_nondeterministic, mutates, property_uses, walk,
+)
 from pycypher_nmetl_spark.compiler.bindings import Bindings, VarInfo
 from pycypher_nmetl_spark.compiler.exprs import ExprCompiler
 from pycypher_nmetl_spark.compiler.patterns import compile_match, materialize_subpatterns
@@ -109,6 +112,14 @@ def _plan_deterministic(df, fallback: bool = False) -> bool:
         return fallback
 
 
+class _QueryFacts(threading.local):
+    """Per-thread facts of the query being compiled (see
+    CypherEngine._query_scope); the class attributes are the defaults."""
+
+    nondet: bool = False  # the AST fallback of _plan_deterministic
+    uses: dict = {}  # astutil.property_uses: what the scans bind
+
+
 class CypherEngine:
     """Executes Cypher text against a GraphCatalog.
 
@@ -142,16 +153,12 @@ class CypherEngine:
         # per-thread "a run() deadline is active" marker: the cache-hit
         # path must serve a fresh Dataset wrapper under a deadline (see
         # execute) without penalizing plain execute() serves
-        import threading as _threading
-
-        self._deadline_active = _threading.local()
-        # per-thread: does the query being compiled call a non-deterministic
-        # function? (the AST-level fallback for _plan_deterministic on
-        # deployments without plan introspection)
-        self._query_nondet = _threading.local()
+        self._deadline_active = threading.local()
+        # per-thread facts of the query being compiled (see _query_scope)
+        self._query = _QueryFacts()
         # per-thread: is the open transaction a read snapshot (see
         # _transaction)?
-        self._snapshot = _threading.local()
+        self._snapshot = threading.local()
         from pycypher_nmetl_spark.audit import EngineMetrics
 
         self.metrics = EngineMetrics()
@@ -251,7 +258,6 @@ class CypherEngine:
             ast = parse(cypher)
         except CypherSyntaxError as e:
             return [f"syntax: {e}"]
-        self._query_nondet.flag = is_nondeterministic(ast)
         params = parameters or {}
         # unknown labels/types in READ patterns: since round 9 these
         # legally match zero rows at execution (openCypher), so the
@@ -268,7 +274,7 @@ class CypherEngine:
             ]
         try:
             # a snapshot even for a write: validate never commits
-            with self._transaction(writes=False):
+            with self._transaction(writes=False), self._query_scope(ast):
                 self._run_query(ast, params)
             return []
         except Exception as e:  # noqa: BLE001
@@ -446,8 +452,8 @@ class CypherEngine:
     ) -> "tuple[DataFrame, bool]":
         """The guarded compile every query takes (execute and the
         transactional execute_many): parse unless ``ast`` is given, the
-        semantic check, the nondeterminism flag, the complexity guard,
-        the clauses inside the transaction rule, the dyn-output decode,
+        semantic check, the complexity guard, the clauses inside the
+        transaction rule and the query's scope, the dyn-output decode,
         then the ``compile`` audit event and the metrics.
 
         Returns (result, reusable): a result may be served again for the
@@ -463,13 +469,12 @@ class CypherEngine:
             if ast is None:
                 ast = parse(cypher)
             self._semantic_check(ast)
-            self._query_nondet.flag = nondet = is_nondeterministic(ast)
             if self.max_complexity is not None:
                 from pycypher_nmetl_spark.guards import check_complexity
 
                 check_complexity(self.catalog, ast, self.max_complexity)
             writes = mutates(ast)
-            with self._transaction(writes):
+            with self._transaction(writes), self._query_scope(ast) as nondet:
                 result = self._run_query(ast, params, prefix)
             result = self._decode_dyn_outputs(result, mixed_ok=mixed_ok)
         except Exception as e:
@@ -731,7 +736,6 @@ class CypherEngine:
         parameters: dict[str, Any] | None = None,
         transactional: bool = False,
         share_scans: bool = False,
-        share_scans_storage: str = "DISK_ONLY",
     ) -> list[DataFrame]:
         """Multi-query composition (reference: multi_query_executor.py:1-269):
         queries are dependency-ordered by produces/consumes analysis and
@@ -767,9 +771,7 @@ class CypherEngine:
         if not transactional:
             shared: dict[str, tuple[int, Bindings]] = {}
             if share_scans:
-                shared = self._plan_shared_scans(
-                    specs, params, storage=share_scans_storage
-                )
+                shared = self._plan_shared_scans(specs, params)
             for spec in order_queries(specs):
                 results[spec.id] = self.execute(
                     spec.cypher, parameters, _prefix=shared.get(spec.id)
@@ -791,7 +793,7 @@ class CypherEngine:
         return [results[str(i)] for i in range(len(cyphers))]
 
     def _plan_shared_scans(
-        self, specs, params: dict, storage: str = "DISK_ONLY"
+        self, specs, params: dict
     ) -> "dict[str, tuple[int, Bindings]]":
         """Group a read-only batch by identical leading MATCH run and
         compile+persist each shared prefix once (the Spark-first answer
@@ -808,14 +810,15 @@ class CypherEngine:
         whitespace/case differences still share; params are batch-wide,
         so two queries with the same prefix text see the same values.
 
-        At 100 TB the persisted prefix is the *filtered, joined,
-        column-pruned* pattern — usually orders of magnitude smaller
-        than its inputs. ``storage`` defaults to DISK_ONLY: caching the
-        prefix in the unified memory pool competes with the member
-        queries' own execution memory (measured: hash aggregations over
-        a cached multi-hop prefix OOM at gen100x under MEMORY_AND_DISK,
-        while DISK_ONLY runs the same batch 2.4x faster than plain) —
-        pass "MEMORY_AND_DISK" when the prefix is known-small. Call
+        The persist boundary defeats Catalyst's column pruning, so the
+        prefix compiles under its members' property uses: its scans bind
+        only properties some member reads. At 100 TB this *filtered,
+        joined, narrow* pattern is usually orders of magnitude smaller
+        than its inputs. It is persisted DISK_ONLY: caching it in the
+        unified memory pool competes with the member queries' own
+        execution memory (measured: hash aggregations over a cached
+        multi-hop prefix OOM at gen100x under MEMORY_AND_DISK, while
+        DISK_ONLY runs the same batch 2.4x faster than plain). Call
         :meth:`release_shared_scans` after the batch's results are
         consumed.
         """
@@ -848,26 +851,19 @@ class CypherEngine:
                 continue
             sid0 = members[0]
             n = run_len[sid0]
-            with self._transaction(writes=False):
+            with self._transaction(writes=False), self._query_scope(
+                [asts[sid] for sid in members]
+            ):
                 b = Bindings.unit(self.spark)
                 for clause in asts[sid0].clauses[:n]:
                     b = compile_match(self, b, clause, params)
-            # persist boundary defeats Catalyst column pruning (the cache
-            # materializes every column), so prune manually to what the
-            # member queries' remaining clauses actually reference —
-            # persisting the full-width join frame OOMs exactly where
-            # this feature matters (wide multi-hop prefixes at scale)
-            keep = self._prefix_keep_columns(
-                b, [asts[sid].clauses[run_len[sid]:] for sid in members]
-            )
-            pruned = b.df.select(*[c for c in b.df.columns if c in keep])
             # advisory cost model (gen100x lesson: sharing approaches
             # break-even when the persisted prefix is large relative to
             # the member work — persist write + K persisted reads can
             # cost what K pruned parquet scans cost): skip persisting
             # when the Catalyst size estimates predict < 1.1x
             speedup, p_bytes, i_bytes = self._shared_scan_benefit(
-                pruned, len(members)
+                b.df, len(members)
             )
             if speedup < 1.1:
                 audit_event(
@@ -881,7 +877,7 @@ class CypherEngine:
                     },
                 )
                 continue
-            df = pruned.persist(getattr(StorageLevel, storage))
+            df = b.df.persist(StorageLevel.DISK_ONLY)
             self._shared_scans.append(df)
             seed = Bindings(df, b.vars)
             for sid in members:
@@ -944,54 +940,6 @@ class CypherEngine:
                 stack.append(it.next())
         return False
 
-    def _prefix_keep_columns(self, b: Bindings, remaining) -> set:
-        """Columns of the shared prefix frame the member queries can
-        still see: every variable keeps its identity/structural columns
-        (later clauses may re-join or label-test it), property columns
-        survive only if some member's remaining clauses reference them —
-        via `v.prop`, an inline `{prop: val}` map on a re-bound pattern
-        var, or any whole-variable use (RETURN v, labels(v), v[key],
-        WITH v AS w, ...), which conservatively keeps all of them."""
-        from pycypher_nmetl_spark.compiler.bindings import pcol
-        from pycypher_nmetl_spark.cypher.ast_nodes import (
-            MapLit, Prop, Var,
-        )
-
-        needed: set[tuple[str, str]] = set()
-        var_occ: dict[str, int] = {}
-        prop_occ: dict[str, int] = {}
-        for node in walk(remaining):
-            if isinstance(node, Prop) and isinstance(node.target, Var):
-                needed.add((node.target.name, node.key))
-                prop_occ[node.target.name] = prop_occ.get(node.target.name, 0) + 1
-            if isinstance(node, Var):
-                var_occ[node.name] = var_occ.get(node.name, 0) + 1
-            v = getattr(node, "var", None)
-            props = getattr(node, "props", None)
-            if isinstance(v, str) and isinstance(props, MapLit):
-                for k, _ in props.pairs:
-                    needed.add((v, k))
-
-        # whole-variable use = Var occurrences beyond those that were
-        # only the target of a Prop access
-        full = {v for v, cnt in var_occ.items() if cnt > prop_occ.get(v, 0)}
-        var_owned: set[str] = set()
-        keep: set[str] = set()
-        for var in b.vars:
-            cols = set(b.var_columns(var))
-            var_owned |= cols
-            if var in full:
-                keep |= cols
-                continue
-            prop_cols = set(b.prop_columns(var))
-            keep |= cols - prop_cols  # identity + label/src/dst/type
-            keep |= {
-                pcol(var, k) for (v2, k) in needed if v2 == var
-            } & prop_cols
-        # columns not owned by any variable (compiler internals): keep
-        keep |= set(b.df.columns) - var_owned
-        return keep
-
     def release_shared_scans(self) -> int:
         """Unpersist every shared MATCH-prefix frame created by
         execute_many(share_scans=True). Returns how many were released.
@@ -1007,6 +955,18 @@ class CypherEngine:
         return n
 
     # ------------------------------------------------------------------ #
+    @contextlib.contextmanager
+    def _query_scope(self, queries):
+        """Set this thread's query facts from ``queries`` and yield the
+        nondeterminism flag; a procedure may compile a nested query, so
+        the outer facts come back on exit."""
+        q, outer = self._query, (self._query.nondet, self._query.uses)
+        q.nondet, q.uses = is_nondeterministic(queries), property_uses(queries)
+        try:
+            yield q.nondet
+        finally:
+            q.nondet, q.uses = outer
+
     @contextlib.contextmanager
     def _transaction(self, writes: bool):
         """The one transaction rule every query runs under (reference:
@@ -1165,7 +1125,7 @@ class CypherEngine:
         schema = {f.name: f.dataType for f in bindings.df.schema.fields}
         nondet = body_nondet or not _plan_deterministic(
             bindings.df,
-            fallback=not getattr(self._query_nondet, "flag", False),
+            fallback=not self._query.nondet,
         )
         if nondet:
             key_col = None

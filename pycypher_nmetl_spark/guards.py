@@ -35,19 +35,21 @@ def plan_size_bytes(df: DataFrame) -> float | None:
     """Catalyst's sizeInBytes estimate for the frame's optimized plan.
 
     Driver-side only (analysis + optimization, no job). Returns None when
-    the estimate is unavailable (e.g. Spark Connect without plan access).
+    the estimate is unavailable (e.g. Spark Connect without plan access)
+    or unknown: Long.MaxValue is Catalyst's "unknown" sentinel
+    (spark.sql.defaultSizeInBytes), reported e.g. for RDD-backed leaves
+    like localCheckpoint results, and a plan over such a leaf only
+    rescales it (a Project narrows it by its row-width ratio).
     """
     try:
-        stats = df._jdf.queryExecution().optimizedPlan().stats()
-        size = float(stats.sizeInBytes())  # py4j converts scala.BigInt
+        plan = df._jdf.queryExecution().optimizedPlan()
+        sizes = [float(plan.stats().sizeInBytes())]  # py4j converts BigInt
+        leaves = plan.collectLeaves().iterator()
+        while leaves.hasNext():
+            sizes.append(float(leaves.next().stats().sizeInBytes()))
     except Exception:  # noqa: BLE001
         return None
-    # Long.MaxValue is Catalyst's "unknown" sentinel
-    # (spark.sql.defaultSizeInBytes), reported e.g. for RDD-backed plans
-    # like localCheckpoint results — not a real estimate
-    if size >= float(2**63 - 1):
-        return None
-    return size
+    return None if max(sizes) >= float(2**63 - 1) else sizes[0]
 
 
 def check_cross_join(left: DataFrame, right: DataFrame, max_product_bytes: float) -> None:

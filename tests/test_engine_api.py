@@ -199,3 +199,57 @@ def test_column_calls_skip_origin_capture(spark, monkeypatch):
     monkeypatch.undo()
     assert sent, "the Column calls crossed into the JVM unobserved"
     assert not [c for c in sent if "PySparkCurrentOrigin" in c], sent
+
+
+@pytest.mark.parametrize(
+    "query, uses",
+    [
+        (
+            "MATCH (a:P)-[r:K]->(b:P {name: 'x'}) WHERE a.age > 1 "
+            "RETURN a.name AS n, count(b) AS c",
+            {"a": {"age", "name"}, "r": set()},
+        ),
+        # a map projection reads its keys; `.*` and a var item read all
+        ("MATCH (a)-->(b) RETURN a{.name, b} AS m", {"a": {"name"}}),
+        ("MATCH (a)-->(b) RETURN a{.*} AS m, b.x AS x", {"b": {"x"}}),
+        # a property off a non-variable target widens every set
+        (
+            "MATCH (a)-[r]->(b) RETURN startNode(r).name AS s, b.x AS x",
+            {"a": {"name"}, "b": {"name", "x"}},
+        ),
+        # a $param property map, a renaming WITH, a named path
+        ("MATCH (a $p)-->(b) RETURN b.x AS x", {"b": {"x"}}),
+        ("MATCH (a)-->(b) WITH a AS m RETURN m.x AS x", {"b": set(), "m": {"x"}}),
+        ("MATCH p = (a)-->(b) RETURN b.x AS x", {}),
+        # both UNION branches and subquery bodies count
+        (
+            "MATCH (a) RETURN a.x AS x UNION MATCH (a) "
+            "WHERE EXISTS { MATCH (a)-->(c) WHERE c.v > 1 } RETURN a.y AS x",
+            {"a": {"x", "y"}, "c": {"v"}},
+        ),
+        ("MATCH (a) RETURN *", {}),
+        ("MATCH (a) SET a.x = 1 RETURN a.y AS y", {}),
+    ],
+)
+def test_property_uses(query, uses):
+    from pycypher_nmetl_spark.compiler.astutil import property_uses
+    from pycypher_nmetl_spark.cypher.parser import Parser
+
+    assert property_uses(Parser(query).parse()) == {
+        v: frozenset(k) for v, k in uses.items()
+    }
+
+
+def test_nested_compile_restores_property_uses(golden, spark):
+    """A procedure that compiles a query must not leave its property
+    uses behind for the rest of the outer query's scans."""
+
+    def proc(engine, args):
+        return engine.execute("MATCH (n:Person) RETURN n.age AS x")
+
+    golden.register_procedure("test.inner", proc)
+    rows = golden.run(
+        "CALL test.inner() YIELD x MATCH (n:Person) WHERE n.age = x "
+        "RETURN n.name AS name"
+    )
+    assert sorted(r.name for r in rows) == ["Alice", "Bob", "Carol", "Dave"]

@@ -519,3 +519,39 @@ class TestShareScans:
         shared = self._rows(eng.execute_many(batch, share_scans=True))
         assert shared == plain
         assert eng.release_shared_scans() == 0
+
+    @pytest.mark.parametrize(
+        "item",
+        ["a{.name}", "b{.*}", "startNode(r).name", "endNode(r).name"],
+    )
+    def test_property_reads_beyond_var_dot_key(self, erig, item):
+        """Property reads that are not `var.key` — a map projection, its
+        `.*` form, a property of startNode/endNode — must see the same
+        values through the shared prefix as plain (they read as silent
+        nulls when the prefix did not bind the properties they use)."""
+        prefix = "MATCH (a:Person)-[r:KNOWS]->(b:Person) "
+        batch = [prefix + f"RETURN {item} AS x", prefix + "RETURN count(*) AS c"]
+        plain = self._rows(erig().execute_many(batch))
+        eng = erig()
+        shared = self._rows(eng.execute_many(batch, share_scans=True))
+        assert eng.release_shared_scans() == 1
+        assert shared == plain
+        assert any(x is not None and x != () for (x,) in plain[0])
+
+    def test_prefix_binds_only_members_properties(self, erig):
+        """The prefix is compiled under the union of its members'
+        property uses and persisted as compiled."""
+        prefix = "MATCH (a:Person)-[r:KNOWS]->(b:Person) "
+        batch = [
+            prefix + "RETURN a.name AS n",
+            prefix + "RETURN b.age AS g, r.since AS s",
+        ]
+        eng = erig()
+        eng.execute_many(batch, share_scans=True)
+        try:
+            (prefix_df,) = eng._shared_scans
+            assert sorted(prefix_df.columns) == sorted(
+                ["a", "a__name", "r", "r__src", "r__dst", "r__since", "b", "b__age"]
+            )
+        finally:
+            eng.release_shared_scans()

@@ -368,6 +368,19 @@ def test_set_items_apply_left_to_right(run):
     assert run("MATCH (n:Person {name:'Bob'}) RETURN n.salary AS s") == [(10.0,)]
 
 
+def test_set_returns_value_in_stored_type(golden):
+    """RETURN after SET shows each value with the type the table stores:
+    an integer set into the double salary column comes back a double,
+    both from the SET query and from a later read."""
+    q = "MATCH (n:Person {name:'Bob'}) "
+    (row,) = golden.run(q + "SET n.age = 1, n.salary = n.age + 1 RETURN n.salary AS s")
+    assert row.s == 2.0 and isinstance(row.s, float)
+    (row,) = golden.run(q + "SET n += {salary: 7} RETURN n.salary AS s")
+    assert row.s == 7.0 and isinstance(row.s, float)
+    (row,) = golden.run(q + "RETURN n.salary AS s")
+    assert row.s == 7.0 and isinstance(row.s, float)
+
+
 def test_set_same_key_twice_last_wins(run):
     assert run(
         "MATCH (n:Person {name:'Bob'}) SET n.age = 1, n.age = 2 RETURN n.age AS a"

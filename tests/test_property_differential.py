@@ -236,22 +236,47 @@ def test_temporal_queries(rig, spec):
 
 # ------------------------------------------------------------------ #
 # share_scans: plain vs shared-prefix execution must be row-identical.
-# This is the safety net for _prefix_keep_columns — a wrong pruning
-# decision would surface as silent nulls (missing-property semantics),
-# not an error, so only a differential check can catch it.
+# This is the safety net for the property-use rule
+# (compiler/astutil.property_uses) the shared prefix is compiled under —
+# a property it wrongly leaves unbound surfaces as silent nulls
+# (missing-property semantics), not an error, so only a differential
+# check can catch it.
+
+@st.composite
+def _entity_items(draw, scope: G.Scope) -> str:
+    """A property read that is not `var.key`: a map projection (`.k`
+    items or `.*`) or a property of startNode(r)/endNode(r)."""
+    rels = sorted(v for v, props in scope.props.items() if "since" in props)
+    kind = draw(st.sampled_from(["keys", "star"] + (["endpoint"] if rels else [])))
+    var = draw(st.sampled_from(sorted(scope.props)))
+    if kind == "star":
+        return var + "{.*}"
+    if kind == "keys":
+        keys = draw(st.lists(
+            st.sampled_from(sorted(scope.props[var])), min_size=1, max_size=2,
+            unique=True,
+        ))
+        return var + "{" + ", ".join("." + k for k in keys) + "}"
+    fn = draw(st.sampled_from(["startNode", "endNode"]))
+    key = draw(st.sampled_from(sorted(G.PERSON_PROPS)))
+    return f"{fn}({draw(st.sampled_from(rels))}).{key}"
+
 
 @st.composite
 def shared_prefix_batches(draw):
     pat = draw(st.sampled_from(G.PATTERNS))()
     where = draw(st.none() | G.predicates(pat.scope))
     prefix = pat.cypher_match + (f" WHERE {where.cy}" if where is not None else "")
+    item = G.projection_items(pat.scope).map(lambda it: it.cy) | _entity_items(
+        pat.scope
+    )
     batch = []
     for _ in range(draw(st.integers(min_value=2, max_value=4))):
-        items = draw(st.lists(G.projection_items(pat.scope), min_size=1, max_size=3))
+        items = draw(st.lists(item, min_size=1, max_size=3))
         distinct = "DISTINCT " if draw(st.booleans()) else ""
         batch.append(
             prefix + " RETURN " + distinct
-            + ", ".join(f"{it.cy} AS x{i}" for i, it in enumerate(items))
+            + ", ".join(f"{it} AS x{i}" for i, it in enumerate(items))
         )
     return batch
 
@@ -264,6 +289,8 @@ def test_share_scans_differential(rig, batch):
         sorted(map(tuple, df.collect()), key=G._sort_key)
         for df in eng.execute_many(batch)
     ]
+    # a result-cache hit would serve the plain plan, not the shared one
+    eng.cache.clear()
     shared_dfs = eng.execute_many(batch, share_scans=True)
     shared = [
         sorted(map(tuple, df.collect()), key=G._sort_key) for df in shared_dfs

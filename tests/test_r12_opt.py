@@ -400,6 +400,16 @@ class TestQppBoundaryElimination:
         scans = len(re.findall(r"^\(\d+\) Scan ", plan, re.M))
         assert scans >= 4, plan
 
+    def test_inline_where_endpoint_property_keeps_join(self, chain_graph):
+        # endNode(r).name reads the boundary node's property without
+        # naming it: the elimination must not fire (it read as null)
+        q = (
+            "MATCH (s:N)((a)-[r:E]->(b WHERE endNode(r).name <> 'n2')){2,2}(t:N) "
+            "RETURN s.name AS sn, t.name AS tn"
+        )
+        rows = sorted(tuple(r) for r in chain_graph.execute(q).collect())
+        assert rows == [("n2", "n4")]
+
     def test_inline_where_on_boundary_keeps_join(self, chain_graph):
         # a boundary constraint needs the node's properties — the
         # elimination must not fire when the hoisted WHERE references it
@@ -468,6 +478,35 @@ class TestTerminalAndMiddleElision:
         assert rows == [("n2",), ("n3",)]
         scans = len(re.findall(r"^\(\d+\) Scan ", plan, re.M))
         assert scans == 4, plan
+
+    @pytest.mark.parametrize(
+        "query, expected",
+        [
+            (
+                "MATCH (n:N) RETURN n.name AS k, "
+                "[(n)-[:E]->(m) | n{.name}.name] AS v",
+                [("n1", ["n1"]), ("n2", ["n2"]), ("n3", ["n3"]), ("n4", [])],
+            ),
+            (
+                "MATCH (n:N) RETURN n.name AS k, "
+                "[(n)-[r:E]->(m) | startNode(r).name] AS v",
+                [("n1", ["n1"]), ("n2", ["n2"]), ("n3", ["n3"]), ("n4", [])],
+            ),
+            (
+                "MATCH (n:N) MATCH (n)-[r:E]->(m) "
+                "WHERE startNode(r).name = 'n1' RETURN m.name AS k, 0 AS v",
+                [("n2", 0)],
+            ),
+        ],
+    )
+    def test_property_read_off_bound_var_keeps_scan(
+        self, chain_graph, query, expected
+    ):
+        # a map projection or a startNode(r) property reads the bound
+        # var's properties without naming it as `n.key`: elision must
+        # not fire (it made these reads null)
+        rows = sorted(tuple(r) for r in chain_graph.execute(query).collect())
+        assert rows == expected
 
     def test_terminal_unregistered_keeps_scan(self, unregistered_graph):
         # unproven endpoint label: fallback keeps the terminal node join
