@@ -73,9 +73,6 @@ class GraphCatalog:
         # Readers never take it — they compile against a thread-local
         # begin() snapshot and stay lock-free (round-5 concurrency work).
         self._write_lock = threading.RLock()
-        # registered Cypher scalar functions / procedures
-        self.functions: dict[str, object] = {}
-        self.procedures: dict[str, object] = {}
         # bumped on every committed mutation; invalidates result caches
         # (reference: relational_models.py _data_epoch)
         self.data_epoch = 0

@@ -659,6 +659,10 @@ class ExprCompiler:
         return None
 
     def _c_BinOp(self, e: BinOp) -> Column:
+        if self._static_kind(e.left) == self._static_kind(e.right) == "null":
+            # null <op> null is an untyped null; Spark would type it
+            # double and cast a CASE's other branches to double with it
+            return F.lit(None)
         l, r = self.col(e.left), self.col(e.right)
         if e.op == "+":
             lk, rk = self._static_kind(e.left), self._static_kind(e.right)

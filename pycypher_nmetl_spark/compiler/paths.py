@@ -10,7 +10,13 @@ openCypher semantics implemented:
     per (start, end) pair, found by level-synchronous BFS with a
     visited-set (so the search space stays linear in reachable pairs,
     not exponential in paths);
-  * zero-length (``*0..``) binds b = a with an empty edge list.
+  * zero-length (``*0..``) binds b = a with an empty edge list;
+  * the tip ``b`` binds exactly as a fixed hop's far endpoint does
+    (``patterns.bind_far_endpoint``: a cyclic close checks id, label
+    space and every declared label; a labelled tip joins its label's
+    scan; a named unlabelled tip joins the union scan), and inline
+    property maps on the tip and the edges filter through
+    ``patterns.filter_props``. This module binds no endpoint itself.
 
 Execution strategy (scale notes):
 
@@ -35,7 +41,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from pycypher_nmetl_spark.compiler.bindings import Bindings, VarInfo, fresh_name, pcol
-from pycypher_nmetl_spark.compiler.exprs import ExprCompiler
 from pycypher_nmetl_spark.cypher.ast_nodes import NodePattern, PathPattern, RelPattern
 
 if TYPE_CHECKING:
@@ -68,7 +73,7 @@ def build_varlength_path(
     elements = path.elements
     rel_vars: list[tuple[str, tuple[str, ...]]] = []
     first: NodePattern = elements[0]
-    pb = _scan_node_into(engine, None, first, outer, params)
+    pb = _scan_node_into(engine, first, outer, params)
     pb = apply_var_preds(engine, pb, var_preds, applied, params)
     prev_var = _ensure_var(first)
     hop_cols: list = []  # Columns counting hops, for length(p)
@@ -129,9 +134,7 @@ def _edge_hop_table(
     ids are only unique per label (round-5 fix — id collisions across
     label spaces fabricated paths, e.g. (c:Customer)-[:FROM_NATION*2]->
     chained a Nation tip back onto same-id Customer edges)."""
-    from pycypher_nmetl_spark.compiler.patterns import (
-        edge_scan, entity_prop_col, prop_pairs,
-    )
+    from pycypher_nmetl_spark.compiler.patterns import edge_scan, filter_props
 
     cat = engine.catalog
     use_types = list(rel.types) if rel.types else cat.rel_types()
@@ -140,12 +143,7 @@ def _edge_hop_table(
         tmp = fresh_name("_vl")
         edf, rinfo = edge_scan(engine, tmp, [t])
         src_c, dst_c = pcol(tmp, "src"), pcol(tmp, "dst")
-
-        if rel.props:
-            cc = ExprCompiler(Bindings(edf, {tmp: rinfo}), params)
-            for key, expr in prop_pairs(rel.props, params):
-                target = entity_prop_col(edf, tmp, key)
-                edf = edf.filter(target == cc.col(expr))
+        edf = filter_props(engine, Bindings(edf, {tmp: rinfo}), tmp, rel.props, params).df
 
         sl, dl = cat.edge_endpoints(t)
         sl, dl = F.lit(sl or ""), F.lit(dl or "")
@@ -197,7 +195,8 @@ def _expand_varlength(
     starts_unique: bool = False,
 ):
     from pycypher_nmetl_spark.compiler.patterns import (
-        _ensure_var, entity_prop_col, node_scan, prop_pairs,
+        _ensure_var, bind_far_endpoint, filter_props, other_side_labels,
+        pattern_labels,
     )
 
     cat = engine.catalog
@@ -243,7 +242,6 @@ def _expand_varlength(
     # paths: (_start, _startl, _tip, _tipl, _edges array<edge id>)
 
     nvar = _ensure_var(nxt)
-    already_bound = nvar in pb.vars
     tipname = fresh_name("_tip")
     tiplname = fresh_name("_tipl")
     edgename = rvar
@@ -265,71 +263,16 @@ def _expand_varlength(
     vars_[rvar] = VarInfo("rel", tuple(rel.types), anon=rel.var is None)
     pb = Bindings(df, vars_)
 
-    def _tip_guard(target_labels: tuple[str, ...] | list[str]):
-        base = F.col(tiplname) == ""
-        if target_labels:
-            return base | F.col(tiplname).isin(*target_labels)
-        return F.lit(True)
-
-    if already_bound:
-        binfo = pb.vars.get(nvar)
-        guard = _tip_guard(binfo.labels if binfo is not None else ())
-        if (binfo is None or not binfo.labels) and pcol(nvar, "label") in pb.df.columns:
-            guard = (F.col(tiplname) == "") | (
-                F.col(tiplname) == F.col(pcol(nvar, "label"))
-            )
-        pb = pb.with_df(
-            pb.df.filter((F.col(tipname) == F.col(nvar)) & guard)
-            .drop(tipname, tiplname)
-        )
-    else:
-        labels = list(nxt.labels)
-        if not labels and nvar in outer.vars and outer.vars[nvar].labels:
-            labels = list(outer.vars[nvar].labels)
-        if labels:
-            ndf, ninfo = node_scan(engine, nvar, labels)
-            fdf = pb.df.filter(_tip_guard(labels))
-            df = fdf.join(
-                ndf, fdf[tipname] == ndf[nvar], "inner"
-            ).drop(tipname, tiplname)
-            pb = Bindings(
-                df, {**pb.vars, nvar: VarInfo("node", tuple(labels), anon=nxt.var is None)}
-            )
-        elif nxt.var is not None:
-            # named endpoint without label knowledge: union-all scan so
-            # property access works — restricted to the labels a tip
-            # over these edge types can carry when every registration
-            # proves its sides (the _tipl guard can never match others)
-            from pycypher_nmetl_spark.compiler.patterns import other_side_labels
-
-            use_types = list(rel.types) if rel.types else cat.rel_types()
-            # a zero-hop tip IS the start node, whose label the edge
-            # registrations say nothing about — only restrict for lo>=1
-            tip_among = (
-                other_side_labels(cat, use_types, rel.direction)
-                if lo >= 1
-                else None
-            )
-            ndf, _ = node_scan(engine, nvar, [], among=tip_among)
-            df = pb.df.join(
-                ndf,
-                (pb.df[tipname] == ndf[nvar])
-                & (
-                    (pb.df[tiplname] == "")
-                    | (pb.df[tiplname] == ndf[pcol(nvar, "label")])
-                ),
-                "inner",
-            ).drop(tipname, tiplname)
-            pb = Bindings(df, {**pb.vars, nvar: VarInfo("node", ())})
-        else:
-            pb = pb.with_df(pb.df.withColumnRenamed(tipname, nvar).drop(tiplname))
-            pb = pb.add_var(nvar, VarInfo("node", (), anon=True))
-        if nxt.props:
-            cc = ExprCompiler(pb, params)
-            for key, expr in prop_pairs(nxt.props, params):
-                target = entity_prop_col(pb.df, nvar, key)
-                pb = pb.with_df(pb.df.filter(target == cc.col(expr)))
-
+    # the tip binds by the fixed hop's rule; a zero-hop tip IS the start
+    # node, whose label the edge registrations say nothing about, so the
+    # union scan is restricted only for lo >= 1
+    use_types = list(rel.types) if rel.types else cat.rel_types()
+    among = other_side_labels(cat, use_types, rel.direction) if lo >= 1 else None
+    pb = bind_far_endpoint(
+        engine, pb, nxt, pattern_labels(nxt, outer), tipname, tiplname, among
+    )
+    pb = filter_props(engine, pb, nvar, nxt.props, params)
+    pb = pb.with_df(pb.df.drop(tipname, tiplname))
     return pb, rvar, F.size(F.col(edgename))
 
 

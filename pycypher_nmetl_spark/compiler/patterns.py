@@ -298,18 +298,11 @@ def build_path_frame(
         # subqueries whose seed var is consumed as a bare id): skip the
         # seed node scan when the first edge's registered join-side
         # label proves the seed's label
-        seed_labels = list(first.labels)
-        if not seed_labels and first.var in outer.vars:
-            seed_labels = list(outer.vars[first.var].labels)
+        seed_labels = pattern_labels(first, outer)
         rel0: RelPattern = elements[1]
         use_types = list(rel0.types) if rel0.types else engine.catalog.rel_types()
-        seed_dir = {"R": "L", "L": "R", "U": "U"}[rel0.direction]
-        if (
-            not rel0.varlength
-            and seed_labels
-            and _endpoint_label_guaranteed(
-                engine.catalog, use_types, seed_dir, seed_labels
-            )
+        if seed_labels and _endpoint_label_guaranteed(
+            engine.catalog, use_types, _REVERSE[rel0.direction], seed_labels
         ):
             var = _ensure_var(first)
             pb, rvar = _expand(
@@ -320,7 +313,7 @@ def build_path_frame(
             pb = apply_var_preds(engine, pb, var_preds, applied, params)
             i = 3
     if pb is None:
-        pb = _scan_node_into(engine, None, first, outer, params)
+        pb = _scan_node_into(engine, first, outer, params)
         pb = apply_var_preds(engine, pb, var_preds, applied, params)
 
     while i < len(elements):
@@ -360,31 +353,66 @@ def _ensure_var(np: NodePattern) -> str:
 
 
 def _scan_node_into(
-    engine: "CypherEngine",
-    pb: Bindings | None,
-    np: NodePattern,
-    outer: Bindings,
-    params: dict,
+    engine: "CypherEngine", np: NodePattern, outer: Bindings, params: dict
 ) -> Bindings:
-    """Start (or extend) a path frame with a node pattern scan."""
+    """Start a path frame with a node pattern scan."""
     var = _ensure_var(np)
-    labels = list(np.labels)
-    # inherit label info from the outer scope for correlated patterns
-    if not labels and var in outer.vars and outer.vars[var].labels:
-        labels = list(outer.vars[var].labels)
-    if pb is not None and var in pb.vars:
-        out = pb
-    else:
-        df, info = node_scan(engine, var, labels)
-        info = VarInfo(info.kind, info.labels, anon=np.var.startswith("_anon"))
-        frame = Bindings(df, {var: info})
-        out = frame if pb is None else _merge(pb, frame, "inner", engine)
-    if np.props:
-        cc = ExprCompiler(out, params)
-        for key, expr in prop_pairs(np.props, params):
-            target = entity_prop_col(out.df, var, key)
-            out = out.with_df(out.df.filter(target == cc.col(expr)))
-    return out
+    df, info = node_scan(engine, var, pattern_labels(np, outer))
+    frame = Bindings(df, {var: VarInfo(info.kind, info.labels, anon=var.startswith("_anon"))})
+    return filter_props(engine, frame, var, np.props, params)
+
+
+# ---------------------------------------------------------------------- #
+# the hop rule: the per-hop decisions every hop compiler (fixed-length,
+# FK-collapsed, var-length in paths.py) takes through these helpers
+# ---------------------------------------------------------------------- #
+_REVERSE = {"R": "L", "L": "R", "U": "U"}
+
+
+def far_labels(cat, rel_type: str, direction: str) -> tuple:
+    """The registered labels (None = unregistered) of the endpoint a hop
+    over ``rel_type`` lands on: dst for R, src for L, either stored side
+    for U. ``_REVERSE[direction]`` gives the near side."""
+    sl, dl = cat.edge_endpoints(rel_type)
+    return {"R": (dl,), "L": (sl,), "U": (sl, dl)}[direction]
+
+
+def pattern_labels(np: NodePattern, outer: Bindings) -> list[str]:
+    """A node pattern's declared labels, else those of the outer-scope
+    variable it correlates with (EXISTS / pattern predicates)."""
+    if np.labels:
+        return list(np.labels)
+    info = outer.vars.get(np.var)
+    return list(info.labels) if info is not None else []
+
+
+def filter_props(
+    engine: "CypherEngine", pb: Bindings, var: str, props, params: dict
+) -> Bindings:
+    """Filter ``pb`` by the inline property map ``props`` of ``var``
+    (node or edge): one equality per key, each value compiled like a
+    WHERE expression (registered functions included)."""
+    if not props:
+        return pb
+    cc = ExprCompiler(pb, params, {}, engine.functions)
+    for key, expr in prop_pairs(props, params):
+        target = entity_prop_col(pb.df, var, key)
+        pb = pb.with_df(pb.df.filter(target == cc.col(expr)))
+    return pb
+
+
+def _fk_edge_cols(rvar: str, owner_side: str, owner: str, other: str) -> dict:
+    """The edge columns of an FK-collapsed hop as register_edges derives
+    them: src/dst are the owner's id and its fk value (column ``other``)
+    in ``owner_side`` order, the id is xxhash64(src, dst)."""
+    src_e, dst_e = F.col(owner), F.col(other)
+    if owner_side != "src":
+        src_e, dst_e = dst_e, src_e
+    return {
+        pcol(rvar, "src"): src_e,
+        pcol(rvar, "dst"): dst_e,
+        rvar: F.xxhash64(src_e, dst_e),
+    }
 
 
 def _types_label_expr(cat, rvar: str, types: list[str], side: str):
@@ -415,18 +443,11 @@ def _endpoint_label_guaranteed(
     proves the far endpoint carries one of ``labels`` — i.e. a node-table
     join would be a pure no-op existence check. Undirected traversal can
     land on either stored side, so both must be proven."""
-    for t in use_types:
-        sl, dl = cat.edge_endpoints(t)
-        if direction == "R":
-            sides = (dl,)
-        elif direction == "L":
-            sides = (sl,)
-        else:
-            sides = (sl, dl)
-        for s in sides:
-            if not s or s not in labels:
-                return False
-    return True
+    return all(
+        s and s in labels
+        for t in use_types
+        for s in far_labels(cat, t, direction)
+    )
 
 
 def other_side_labels(
@@ -440,19 +461,17 @@ def other_side_labels(
     the hop's other-side label guard can never match outside this set."""
     out: list[str] = []
     for t in use_types:
-        sl, dl = cat.edge_endpoints(t)
-        if direction == "R":
-            sides = (dl,)
-        elif direction == "L":
-            sides = (sl,)
-        else:
-            sides = (sl, dl)
-        for s in sides:
+        for s in far_labels(cat, t, direction):
             if not s or not cat.has_label(s):
                 return None
             if s not in out:
                 out.append(s)
     return out or None
+
+
+def _label_ok(side_label, labels) -> "F.Column":
+    """An edge side's registered label ('' = unknown) admits ``labels``."""
+    return (side_label == "") | side_label.isin(*labels)
 
 
 def _label_guard(pb: Bindings, var: str, side_label) -> "F.Column":
@@ -462,14 +481,65 @@ def _label_guard(pb: Bindings, var: str, side_label) -> "F.Column":
     against an edge endpoint is only meaningful when the labels agree.
     Lenient on unknowns ('' on either side matches anything) so
     label-less edge registrations keep their current behavior."""
-    base = side_label == ""
     info = pb.vars.get(var)
     if info is not None and info.labels:
-        return base | side_label.isin(*info.labels)
+        return _label_ok(side_label, info.labels)
     lab = pcol(var, "label")
     if lab in pb.df.columns:
-        return base | (side_label == pb.df[lab])
+        return (side_label == "") | (side_label == pb.df[lab])
     return F.lit(True)
+
+
+def bind_far_endpoint(
+    engine: "CypherEngine",
+    pb: Bindings,
+    nxt: NodePattern,
+    labels: list[str],
+    far: str,
+    far_label: str | None,
+    among: list[str] | None = None,
+) -> Bindings:
+    """Bind a hop's far endpoint ``nxt`` (named by _ensure_var) from the
+    frame's id column ``far``. ``far_label`` is the column holding the
+    edge's registered label on that side ('' = unknown), or None when
+    the caller has proven it; ``labels`` are the endpoint's declared or
+    inferred labels. One rule for every hop (SURVEY.md §2.4):
+
+      * bound earlier in the path (cyclic back-reference,
+        pattern_matcher.py:502-570): id equality under the label-space
+        guard, plus a semi-join on the node scan of every declared label
+        (node_scan's rule: a label no node carries matches nothing);
+      * labelled: drop rows whose edge side carries another label, then
+        join the label's node scan for its properties;
+      * named with no label known: join the union-all scan
+        (pattern_matcher.py:152-284) on id and label, restricted to
+        ``among``, the labels the caller proved the side can carry.
+
+    The far column itself becomes the binding; the caller drops its
+    transient label columns."""
+    nvar = nxt.var
+    if nvar in pb.vars:
+        df = pb.df.filter(
+            (F.col(far) == F.col(nvar)) & _label_guard(pb, nvar, F.col(far_label))
+        )
+        if nxt.labels:
+            ids = node_scan(engine, nvar, list(nxt.labels))[0].select(nvar)
+            df = df.join(ids, on=nvar, how="left_semi")
+        return pb.with_df(df)
+    df = pb.df
+    if labels:
+        if far_label is not None:
+            df = df.filter(_label_ok(F.col(far_label), labels))
+        ndf, _ = node_scan(engine, nvar, labels)
+        cond = df[far] == ndf[nvar]
+    else:
+        ndf, _ = node_scan(engine, nvar, [], among=among)
+        cond = (df[far] == ndf[nvar]) & (
+            (df[far_label] == "") | (df[far_label] == ndf[pcol(nvar, "label")])
+        )
+    df = df.join(ndf, cond, "inner").drop(ndf[nvar]).withColumn(nvar, F.col(far))
+    info = VarInfo("node", tuple(labels), anon=nvar.startswith("_anon"))
+    return Bindings(df, {**pb.vars, nvar: info})
 
 
 def _try_fk_collapse(
@@ -486,11 +556,15 @@ def _try_fk_collapse(
     projection of one endpoint's node table (catalog.fk_collapse — e.g.
     TPC-H FROM_NATION is just customer.(custkey, nationkey)), the
     bindings ⋈ edges join is a self-join of a table already in the
-    frame. Derive the edge columns (src/dst as column refs, id as the
-    same xxhash64(src, dst) register_edges would assign) and jump
-    straight to the endpoint node table — one join instead of two, and
-    one less scan of the owner parquet. Returns None when the pattern
-    shape doesn't qualify; the generic path is always correct.
+    frame. Derive the edge columns (_fk_edge_cols) and jump straight to
+    the endpoint node table — one join instead of two, and one less
+    scan of the owner parquet. Returns None when the pattern shape
+    doesn't qualify; the generic path is always correct.
+
+    ``pb=None`` is seed-from-edge mode (EXISTS flag subqueries): prev
+    binds from the owner row's fk column, so only the next-is-owner
+    shape helps (when prev is the owner, its table IS the edge source
+    and the scan cannot be elided — the generic path handles it).
     """
     cat = engine.catalog
     if len(rel.types) != 1 or rel.direction not in ("R", "L") or rel.props:
@@ -499,80 +573,23 @@ def _try_fk_collapse(
     fk = cat.fk_collapse(rt)
     if fk is None:
         return None
-    owner_label, owner_side, fk_prop = fk
-    src_label, dst_label = cat.edge_endpoints(rt)
-    if src_label is None or dst_label is None:
+    _owner_label, owner_side, fk_prop = fk
+    (prev_label,) = far_labels(cat, rt, _REVERSE[rel.direction])
+    (next_label,) = far_labels(cat, rt, rel.direction)
+    if prev_label is None or next_label is None:
         return None
-    prev_label = src_label if rel.direction == "R" else dst_label
-    next_label = dst_label if rel.direction == "R" else src_label
+    owner_on_prev = (owner_side == "src") == (rel.direction == "R")
     if pb is None:
-        # seed-from-edge mode (EXISTS flag subqueries): prev binds from
-        # the owner row's fk column; only the next-is-owner shape helps
-        # (when prev is the owner, its table IS the edge source and the
-        # scan cannot be elided — the generic path handles it).
-        if list(seed_labels or ()) != [prev_label]:
+        if list(seed_labels or ()) != [prev_label] or owner_on_prev:
             return None
-        nvar = _ensure_var(nxt)
-        if nvar == prev_var:
-            return None  # cyclic: generic seed path handles it
-        owner_on_prev0 = (owner_side == "src") == (rel.direction == "R")
-        if owner_on_prev0:
+    else:
+        pinfo = pb.vars.get(prev_var)
+        if pinfo is None or pinfo.kind != "node" or pinfo.labels != (prev_label,):
             return None
-        labels0 = list(nxt.labels)
-        if not labels0 and nvar in outer.vars and outer.vars[nvar].labels:
-            labels0 = list(outer.vars[nvar].labels)
-        if labels0 and labels0 != [next_label]:
-            return None
-        ndf, ninfo = node_scan(engine, nvar, [next_label])
-        fkc = pcol(nvar, fk_prop)
-        if fkc not in ndf.columns:
-            return None
-        rvar0 = rel.var or fresh_name("_anon")
-        rinfo0 = VarInfo(
-            "rel", (rt,), anon=rel.var is None,
-            src_var=prev_var if rel.direction == "R" else nvar,
-            dst_var=nvar if rel.direction == "R" else prev_var,
-        )
-        ninfo = VarInfo(
-            ninfo.kind, ninfo.labels,
-            anon=nxt.var is None or nxt.var.startswith("_anon"),
-        )
-        # one scan, zero joins: the owner row IS the edge; a NULL fk is
-        # not an edge; prev's existence/label is enforced by the flag
-        # join back to the outer frame (which scanned prev's table)
-        df = ndf.filter(F.col(fkc).isNotNull()).withColumn(
-            prev_var, F.col(fkc)
-        )
-        src_e = F.col(nvar) if owner_side == "src" else F.col(prev_var)
-        dst_e = F.col(prev_var) if owner_side == "src" else F.col(nvar)
-        df = df.withColumns({
-            pcol(rvar0, "src"): src_e,
-            pcol(rvar0, "dst"): dst_e,
-            rvar0: F.xxhash64(src_e, dst_e),
-        })
-        pb = Bindings(
-            df,
-            {
-                prev_var: VarInfo("node", (prev_label,)),
-                rvar0: rinfo0,
-                nvar: ninfo,
-            },
-        )
-        if nxt.props:
-            cc = ExprCompiler(pb, params)
-            for key, expr in prop_pairs(nxt.props, params):
-                target = entity_prop_col(pb.df, nvar, key)
-                pb = pb.with_df(pb.df.filter(target == cc.col(expr)))
-        return pb, rvar0
-    pinfo = pb.vars.get(prev_var)
-    if pinfo is None or pinfo.kind != "node" or pinfo.labels != (prev_label,):
-        return None
     nvar = _ensure_var(nxt)
-    if nvar in pb.vars:
+    if nvar == prev_var or (pb is not None and nvar in pb.vars):
         return None  # cyclic back-reference: generic path
-    labels = list(nxt.labels)
-    if not labels and nvar in outer.vars and outer.vars[nvar].labels:
-        labels = list(outer.vars[nvar].labels)
+    labels = pattern_labels(nxt, outer)
     if labels and labels != [next_label]:
         return None
     rvar = rel.var or fresh_name("_anon")
@@ -581,20 +598,36 @@ def _try_fk_collapse(
         src_var=prev_var if rel.direction == "R" else nvar,
         dst_var=nvar if rel.direction == "R" else prev_var,
     )
-    owner_on_prev = (owner_side == "src") == (rel.direction == "R")
+    anon = nvar.startswith("_anon")
 
-    if owner_on_prev:
+    if not owner_on_prev:
+        # next IS the owner: join the owner table on its fk -> prev.id;
+        # the join binds the node AND stands in for the edge scan
+        ndf, ninfo = node_scan(engine, nvar, [next_label])
+        fkc = pcol(nvar, fk_prop)
+        if fkc not in ndf.columns:
+            return None
+        ninfo = VarInfo(ninfo.kind, ninfo.labels, anon=anon)
+        if pb is None:
+            # one scan, zero joins: the owner row IS the edge; a NULL fk
+            # is not an edge; prev's existence/label is enforced by the
+            # flag join back to the outer frame (which scanned prev's
+            # table)
+            df = ndf.filter(F.col(fkc).isNotNull()).withColumn(
+                prev_var, F.col(fkc)
+            )
+            vars_ = {prev_var: VarInfo("node", (prev_label,))}
+        else:
+            df = pb.df.join(ndf, pb.df[prev_var] == ndf[fkc], "inner")
+            vars_ = dict(pb.vars)
+        df = df.withColumns(_fk_edge_cols(rvar, owner_side, nvar, prev_var))
+        pb = Bindings(df, {**vars_, rvar: rinfo, nvar: ninfo})
+    else:
         # prev IS the owner: the edge's far endpoint is prev.<fk_prop>
         fkcol = pcol(prev_var, fk_prop)
         if fkcol not in pb.df.columns:
             return None
-        src_e = F.col(prev_var) if owner_side == "src" else F.col(fkcol)
-        dst_e = F.col(fkcol) if owner_side == "src" else F.col(prev_var)
-        df = pb.df.withColumns({
-            pcol(rvar, "src"): src_e,
-            pcol(rvar, "dst"): dst_e,
-            rvar: F.xxhash64(src_e, dst_e),
-        })
+        df = pb.df.withColumns(_fk_edge_cols(rvar, owner_side, prev_var, fkcol))
         pb = Bindings(df, {**pb.vars, rvar: rinfo})
         if nxt.id_only and not nxt.props:
             # id-only endpoint (elision marker): the fk value IS the
@@ -608,72 +641,14 @@ def _try_fk_collapse(
             # fk is not an edge.
             df = df.filter(F.col(fkcol).isNotNull())
             df = df.withColumn(nvar, F.col(fkcol))
-            pb = Bindings(
-                df,
-                {
-                    **pb.vars,
-                    nvar: VarInfo(
-                        "node",
-                        (next_label,),
-                        anon=nxt.var is None or nxt.var.startswith("_anon"),
-                    ),
-                },
-            )
-        elif nxt.var is None and not nxt.labels and not nxt.props:
-            # anonymous endpoint: the fk value is the binding. Existence
-            # must still hold — a NULL or dangling fk is not an edge, and
-            # the generic path's inner join to the endpoint table drops
-            # such rows. Enforce it with a left-semi join on the endpoint
-            # id column alone (one pruned broadcast-able column, far
-            # cheaper than the full node join this branch avoids).
-            df = df.filter(F.col(fkcol).isNotNull())
-            ids = node_scan(engine, nvar, [next_label])[0].select(nvar)
-            df = df.join(ids, df[fkcol] == ids[nvar], "left_semi")
-            df = df.withColumn(nvar, F.col(fkcol))
-            pb = Bindings(
-                df, {**pb.vars, nvar: VarInfo("node", (next_label,), anon=True)}
-            )
+            info = VarInfo("node", (next_label,), anon=anon)
+            pb = Bindings(df, {**pb.vars, nvar: info})
         else:
-            # named / labeled / props-bearing endpoint: join the node
-            # table so property columns resolve (an inline props map on
-            # an anonymous endpoint MUST take this branch — the bare-id
-            # branch has no property columns and the trailing filter
-            # would silently compare NULL and drop every row).
-            ndf, ninfo = node_scan(engine, nvar, [next_label])
-            ninfo = VarInfo(
-                ninfo.kind, ninfo.labels,
-                anon=nxt.var is None or nxt.var.startswith("_anon"),
-            )
-            df = df.join(ndf, df[fkcol] == ndf[nvar], "inner").drop(ndf[nvar])
-            df = df.withColumn(nvar, F.col(fkcol))
-            pb = Bindings(df, {**pb.vars, nvar: ninfo})
-    else:
-        # next IS the owner: join the owner table on its fk -> prev.id;
-        # the join binds the node AND stands in for the edge scan
-        ndf, ninfo = node_scan(engine, nvar, [next_label])
-        fkc = pcol(nvar, fk_prop)
-        if fkc not in ndf.columns:
-            return None
-        ninfo = VarInfo(
-            ninfo.kind, ninfo.labels,
-            anon=nxt.var is None or nxt.var.startswith("_anon"),
-        )
-        df = pb.df.join(ndf, pb.df[prev_var] == ndf[fkc], "inner")
-        src_e = F.col(nvar) if owner_side == "src" else F.col(prev_var)
-        dst_e = F.col(prev_var) if owner_side == "src" else F.col(nvar)
-        df = df.withColumns({
-            pcol(rvar, "src"): src_e,
-            pcol(rvar, "dst"): dst_e,
-            rvar: F.xxhash64(src_e, dst_e),
-        })
-        pb = Bindings(df, {**pb.vars, rvar: rinfo, nvar: ninfo})
-
-    if nxt.props:
-        cc = ExprCompiler(pb, params)
-        for key, expr in prop_pairs(nxt.props, params):
-            target = entity_prop_col(pb.df, nvar, key)
-            pb = pb.with_df(pb.df.filter(target == cc.col(expr)))
-    return pb, rvar
+            # the fk value is the far id and its label is proven: the
+            # rule's labelled case (a NULL or dangling fk is not an
+            # edge, and the inner join drops it)
+            pb = bind_far_endpoint(engine, pb, nxt, [next_label], fkcol, None)
+    return filter_props(engine, pb, nvar, nxt.props, params), rvar
 
 
 def _expand(
@@ -755,20 +730,14 @@ def _expand(
         edf = edf.withColumns({jlcol: dlab, olcol: slab})
         join_col, other_col = dst_c, src_c
 
-    if rel.props:
-        cc = ExprCompiler(Bindings(edf, {rvar: rinfo}), params)
-        for key, expr in prop_pairs(rel.props, params):
-            target = entity_prop_col(edf, rvar, key)
-            edf = edf.filter(target == cc.col(expr))
+    edf = filter_props(engine, Bindings(edf, {rvar: rinfo}), rvar, rel.props, params).df
 
     if pb is None:
         # seed-from-edge: label-space guard (constant-folds when the
         # registered label is static, which the caller guaranteed)
         df = edf
         if seed_labels:
-            df = df.filter(
-                (F.col(jlcol) == "") | F.col(jlcol).isin(*seed_labels)
-            )
+            df = df.filter(_label_ok(F.col(jlcol), seed_labels))
         df = df.withColumn(prev_var, F.col(join_col))
         pb = Bindings(
             df,
@@ -794,103 +763,37 @@ def _expand(
     else:
         rinfo = _dc.replace(rinfo, src_var=prev_var, dst_var=nvar)
     pb.vars[rvar] = rinfo
-    if nvar in pb.vars:
-        # cyclic back-reference (pattern_matcher.py:502-570)
-        pb = pb.with_df(
-            pb.df.filter(
-                (F.col(other_col) == F.col(nvar))
-                & _label_guard(pb, nvar, F.col(olcol))
-            )
-        )
-        if nxt.labels:
-            # label check on an already-bound var: semi-join
-            pb = pb.with_df(
-                pb.df.join(
-                    cat.nodes(nxt.labels[0]).select(F.col("id").alias(nvar)),
-                    on=nvar,
-                    how="left_semi",
-                )
-            )
-        return pb.with_df(pb.df.drop(jlcol, olcol)), rvar
 
-    labels = list(nxt.labels)
-    if not labels:
-        if nvar in outer.vars and outer.vars[nvar].labels:
-            labels = list(outer.vars[nvar].labels)
-        else:
-            # compile-time label inference from the edge's registered endpoints
-            src_l, dst_l = cat.edge_endpoints(rel.types[0]) if len(rel.types) == 1 else (None, None)
-            if rel.direction == "R":
-                inferred = dst_l
-            elif rel.direction == "L":
-                inferred = src_l
-            else:
-                inferred = src_l if src_l is not None and src_l == dst_l else None
-            if inferred:
-                labels = [inferred]
-
-    if labels:
-        # declared/inferred endpoint label vs the edge's registered
-        # other-side label: mismatches match nothing (constant-folds to
-        # an empty plan when both are static)
-        pb = pb.with_df(
-            pb.df.filter((F.col(olcol) == "") | F.col(olcol).isin(*labels))
-        )
-        if (
-            nxt.id_only
-            and not nxt.props
-            and _endpoint_label_guaranteed(cat, use_types, rel.direction, labels)
-        ):
-            # id-only binding (set by the QPP expander for repetition-
-            # boundary nodes nothing downstream reads): every edge of
-            # these types is REGISTERED with this endpoint label, so the
-            # node-table join would add neither a label check nor any
-            # property column — bind the bare edge endpoint instead.
-            # Same edge-implies-endpoint footing as the var-length hop
-            # table (_edge_hop_table), which never joins intermediate
-            # tips. At scale this removes one full node-table join per
-            # eliminated boundary.
-            df = pb.df.withColumn(nvar, F.col(other_col))
-            ninfo = VarInfo(
-                "node",
-                tuple(labels),
-                anon=nxt.var is None or nxt.var.startswith("_anon"),
-            )
-            pb = Bindings(df, {**pb.vars, nvar: ninfo})
-            return pb.with_df(pb.df.drop(jlcol, olcol)), rvar
-        ndf, ninfo = node_scan(engine, nvar, labels)
-        ninfo = VarInfo(ninfo.kind, ninfo.labels, anon=nxt.var is None or nxt.var.startswith("_anon"))
-        df = pb.df.join(ndf, pb.df[other_col] == ndf[nvar], "inner").drop(ndf[nvar])
+    labels = pattern_labels(nxt, outer)
+    if not labels and len(rel.types) == 1:
+        # compile-time label inference from the edge's registered far side
+        sides = set(far_labels(cat, rel.types[0], rel.direction))
+        if len(sides) == 1 and None not in sides:
+            labels = list(sides)
+    if (
+        nvar not in pb.vars
+        and labels
+        and nxt.id_only
+        and not nxt.props
+        and _endpoint_label_guaranteed(cat, use_types, rel.direction, labels)
+    ):
+        # id-only binding (set by the QPP expander for repetition-
+        # boundary nodes nothing downstream reads): every edge of
+        # these types is REGISTERED with this endpoint label, so the
+        # node-table join would add neither a label check nor any
+        # property column — bind the bare edge endpoint instead.
+        # Same edge-implies-endpoint footing as the var-length hop
+        # table (_edge_hop_table), which never joins intermediate
+        # tips. At scale this removes one full node-table join per
+        # eliminated boundary.
+        df = pb.df.filter(_label_ok(F.col(olcol), labels))
         df = df.withColumn(nvar, F.col(other_col))
-        pb = Bindings(df, {**pb.vars, nvar: ninfo})
-    elif nxt.var is None:
-        # anonymous endpoint: nothing downstream reads its properties,
-        # so the bare id is enough — avoids the all-labels union scan
-        df = pb.df.withColumn(nvar, F.col(other_col))
-        pb = Bindings(df, {**pb.vars, nvar: VarInfo("node", (), anon=True)})
+        info = VarInfo("node", tuple(labels), anon=nvar.startswith("_anon"))
+        pb = Bindings(df, {**pb.vars, nvar: info})
     else:
-        # unknown label on a *named* var: union-all scan so property
-        # access still works (pattern_matcher.py:152-284) — restricted
-        # to the traversed edge types' registered other-side labels
-        # when every type has one (the join's olcol guard can never
-        # match any other label; "" is impossible then), else every
-        # label in the catalog.
         among = other_side_labels(cat, use_types, rel.direction)
-        ndf, ninfo = node_scan(engine, nvar, [], among=among)
-        df = pb.df.join(
-            ndf,
-            (pb.df[other_col] == ndf[nvar])
-            & ((pb.df[olcol] == "") | (pb.df[olcol] == ndf[pcol(nvar, "label")])),
-            "inner",
-        ).drop(ndf[nvar])
-        df = df.withColumn(nvar, F.col(other_col))
-        pb = Bindings(df, {**pb.vars, nvar: VarInfo("node", ())})
-
-    if nxt.props:
-        cc = ExprCompiler(pb, params)
-        for key, expr in prop_pairs(nxt.props, params):
-            target = entity_prop_col(pb.df, nvar, key)
-            pb = pb.with_df(pb.df.filter(target == cc.col(expr)))
+        pb = bind_far_endpoint(engine, pb, nxt, labels, other_col, olcol, among)
+    pb = filter_props(engine, pb, nvar, nxt.props, params)
     return pb.with_df(pb.df.drop(jlcol, olcol)), rvar
 
 

@@ -22,6 +22,7 @@ from typing import Any, Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pycypher_nmetl_spark.cache import cache_key
 from pycypher_nmetl_spark.catalog import GraphCatalog
 from pycypher_nmetl_spark.compiler.astutil import (
     is_nondeterministic, mutates, property_uses, walk,
@@ -373,8 +374,6 @@ class CypherEngine:
                 # Spark 4 re-raises SPARK_JOB_CANCELLED on any later
                 # action of that object — drop it from the result cache
                 if self.cache is not None:
-                    from pycypher_nmetl_spark.cache import cache_key
-
                     self.cache.evict(cache_key(cypher, parameters))
             audit_event(
                 "run", cypher, status="error",
@@ -395,7 +394,7 @@ class CypherEngine:
         cypher: str,
         parameters: dict[str, Any] | None = None,
         *,
-        _prefix: "tuple[int, Bindings] | None" = None,
+        _prefix: "DataFrame | tuple[int, Bindings | None] | None" = None,
         _mixed_ok: bool = False,
     ) -> DataFrame:
         """Compile and return the result DataFrame (lazy; caller acts).
@@ -403,32 +402,19 @@ class CypherEngine:
         Mutation-only queries execute their catalog updates eagerly and
         return an empty DataFrame.
 
-        ``_prefix`` is internal (execute_many share_scans): a
-        (clauses_to_skip, seed_bindings) pair whose Bindings is the
-        already-compiled — and persisted — leading MATCH run of this
-        query; the clause loop resumes after it.
+        ``_prefix`` is internal: this query's entry from the share_scans
+        planner (:meth:`_plan_shared_scans`), which has already consulted
+        the result cache for it. It is either the DataFrame that lookup
+        hit, or a (clauses_to_skip, seed_bindings) pair whose Bindings is
+        the already-compiled — and persisted — leading MATCH run of this
+        query (``(0, None)`` when it shares none); the clause loop
+        resumes after it.
         """
-        from pycypher_nmetl_spark.cache import cache_key
-
         params = parameters or {}
         key = cache_key(cypher, params) if self.cache is not None else None
-        if key is not None:
-            hit = self.cache.get(key, self.catalog.data_epoch)
-            if hit is not None:
-                # Spark 4 pins a Dataset to the job group of its FIRST
-                # action (AQE keeps re-executing inside that captured
-                # context), so under an active deadline the stored object
-                # must not be served: (a) this deadline's cancelJobGroup
-                # could not cancel it, and (b) if a previous deadline
-                # cancelled it, every later collect re-raises
-                # SPARK_JOB_CANCELLED. A fresh select("*") wrapper is
-                # plan-identical but re-captures the execution context.
-                # Outside a deadline the stored object is served as-is —
-                # re-collecting it reuses already-computed shuffle stages
-                # (a real warm-query win bench reps rely on).
-                if getattr(self._deadline_active, "depth", 0) > 0:
-                    return hit.select("*")
-                return hit
+        hit = self._cache_hit(key) if _prefix is None else _prefix
+        if isinstance(hit, DataFrame):
+            return hit
 
         if self.rate_limiter is not None:
             self.rate_limiter.acquire()
@@ -442,12 +428,33 @@ class CypherEngine:
             self.cache.put(key, result, self.catalog.data_epoch)
         return result
 
+    def _cache_hit(self, key) -> "DataFrame | None":
+        """The result cache's plan for ``key`` at the current data epoch,
+        or None (a miss, or no cache)."""
+        if self.cache is None:
+            return None
+        hit = self.cache.get(key, self.catalog.data_epoch)
+        if hit is not None and getattr(self._deadline_active, "depth", 0) > 0:
+            # Spark 4 pins a Dataset to the job group of its FIRST
+            # action (AQE keeps re-executing inside that captured
+            # context), so under an active deadline the stored object
+            # must not be served: (a) this deadline's cancelJobGroup
+            # could not cancel it, and (b) if a previous deadline
+            # cancelled it, every later collect re-raises
+            # SPARK_JOB_CANCELLED. A fresh select("*") wrapper is
+            # plan-identical but re-captures the execution context.
+            # Outside a deadline the stored object is served as-is —
+            # re-collecting it reuses already-computed shuffle stages
+            # (a real warm-query win bench reps rely on).
+            return hit.select("*")
+        return hit
+
     def _compile(
         self,
         cypher: str,
         params: dict,
         ast=None,
-        prefix: "tuple[int, Bindings] | None" = None,
+        prefix: "tuple[int, Bindings | None] | None" = None,
         mixed_ok: bool = False,
     ) -> "tuple[DataFrame, bool]":
         """The guarded compile every query takes (execute and the
@@ -756,8 +763,9 @@ class CypherEngine:
         pinned by tests/test_execute_many_equivalence.py.
 
         ``share_scans=True`` (read-only batches only) compiles each
-        group of queries with an identical leading MATCH run against ONE
-        persisted prefix DataFrame — the scan/join work of the shared
+        group of queries that miss the result cache and share an
+        identical leading MATCH run against ONE persisted prefix
+        DataFrame — the scan/join work of the shared
         pattern runs once per group instead of once per query (see
         :meth:`_plan_shared_scans`); call :meth:`release_shared_scans`
         when the results have been consumed.
@@ -769,7 +777,7 @@ class CypherEngine:
         params = parameters or {}
         results: dict[str, DataFrame] = {}
         if not transactional:
-            shared: dict[str, tuple[int, Bindings]] = {}
+            shared: dict[str, DataFrame | tuple[int, Bindings | None]] = {}
             if share_scans:
                 shared = self._plan_shared_scans(specs, params)
             for spec in order_queries(specs):
@@ -794,7 +802,7 @@ class CypherEngine:
 
     def _plan_shared_scans(
         self, specs, params: dict
-    ) -> "dict[str, tuple[int, Bindings]]":
+    ) -> "dict[str, DataFrame | tuple[int, Bindings | None]]":
         """Group a read-only batch by identical leading MATCH run and
         compile+persist each shared prefix once (the Spark-first answer
         to the reference's query_combiner.py AST fusion: instead of
@@ -803,10 +811,14 @@ class CypherEngine:
         underlying table is scanned and joined once per group, not once
         per query).
 
-        Returns {spec.id: (clauses_to_skip, seed_bindings)} for every
-        query in a >=2-member group. Batches containing any mutation or
-        UNION query share nothing: sequential per-query visibility would
-        otherwise change. Grouping keys are structural (AST repr), so
+        Returns each query's ``execute(_prefix=...)`` entry. Every query
+        consults the result cache here, once: a hit's entry is the
+        cached DataFrame, and only the misses are grouped, so a batch
+        that ran before persists nothing. A miss in a >=2-member group
+        gets (clauses_to_skip, seed_bindings), any other miss (0, None).
+        Batches containing any mutation or UNION query share nothing and
+        get no entries: sequential per-query visibility would otherwise
+        change. Grouping keys are structural (AST repr), so
         whitespace/case differences still share; params are batch-wide,
         so two queries with the same prefix text see the same values.
 
@@ -831,21 +843,26 @@ class CypherEngine:
                 return {}
             asts[spec.id] = ast
 
+        out: dict[str, DataFrame | tuple[int, Bindings | None]] = {}
         groups: dict[str, list[str]] = {}
         run_len: dict[str, int] = {}
-        for sid, ast in asts.items():
+        for spec in specs:
+            hit = self._cache_hit(cache_key(spec.cypher, params))
+            out[spec.id] = hit if hit is not None else (0, None)
+            if hit is not None:
+                continue
+            ast = asts[spec.id]
             n = 0
             while n < len(ast.clauses) and isinstance(ast.clauses[n], Match):
                 n += 1
             if n == 0 or n >= len(ast.clauses):
                 continue
             key = "||".join(repr(c) for c in ast.clauses[:n])
-            run_len[sid] = n
-            groups.setdefault(key, []).append(sid)
+            run_len[spec.id] = n
+            groups.setdefault(key, []).append(spec.id)
 
         from pycypher_nmetl_spark.audit import audit_event
 
-        out: dict[str, tuple[int, Bindings]] = {}
         for members in groups.values():
             if len(members) < 2:
                 continue
@@ -1011,14 +1028,15 @@ class CypherEngine:
             self.metrics.inc("mutations_committed")
 
     def _run_query(
-        self, ast, params: dict, prefix: "tuple[int, Bindings] | None" = None
+        self, ast, params: dict, prefix: "tuple[int, Bindings | None] | None" = None
     ) -> DataFrame:
         """Run every branch in the current transaction. A UNION's branches
         must project the same columns; they are unioned by name and, iff
         no separator is UNION ALL (openCypher forbids mixing the two),
         deduplicated. ``prefix`` (execute_many share_scans) is a
         (clauses_to_skip, seed_bindings) pair: the clause loop resumes
-        after the already-compiled leading MATCH run."""
+        after the already-compiled leading MATCH run (from the unit
+        frame when seed_bindings is None)."""
         if prefix is not None:
             n_skip, seed = prefix
             return self._run_clauses(ast.clauses[n_skip:], params, initial=seed)

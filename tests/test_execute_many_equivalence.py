@@ -555,3 +555,34 @@ class TestShareScans:
             )
         finally:
             eng.release_shared_scans()
+
+    def test_cache_consulted_once_before_prefix_planning(self, golden, monkeypatch):
+        """Each member consults the result cache exactly once, before any
+        prefix is planned: a re-run batch is served from the cache and
+        persists nothing, and a partly cached batch shares a prefix only
+        among its misses."""
+        prefix = "MATCH (a:Person)-[:WORKS_AT]->(c:Company) "
+        batch = [prefix + "RETURN a.name AS n", prefix + "RETURN count(*) AS k"]
+        first = self._rows(golden.execute_many(batch, share_scans=True))
+        assert golden.release_shared_scans() == 1
+
+        lookups = []
+        get = golden.cache.get
+        monkeypatch.setattr(
+            golden.cache, "get",
+            lambda key, epoch: lookups.append(key[0]) or get(key, epoch),
+        )
+        again = golden.execute_many(batch, share_scans=True)
+        assert golden.release_shared_scans() == 0
+        assert self._rows(again) == first
+        assert sorted(lookups) == sorted(batch)
+
+        lookups.clear()
+        mixed = batch[:1] + [
+            prefix + "RETURN c.name AS cn",
+            prefix + "RETURN max(a.age) AS m",
+        ]
+        dfs = golden.execute_many(mixed, share_scans=True)
+        assert dfs[0] is again[0]
+        assert golden.release_shared_scans() == 1
+        assert sorted(lookups) == sorted(mixed)

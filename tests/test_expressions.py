@@ -42,6 +42,13 @@ def test_list_concat_plus(golden):
 def test_null_arithmetic(golden):
     assert one(golden, "1 + null") is None
     assert one(golden, "null * 2") is None
+    # null + null has no type: it must not turn a CASE's string branch
+    # into a failing cast to double
+    df = golden.execute(
+        "MATCH (n:Person) RETURN CASE WHEN n.name = 'Alice' THEN 'Alice' "
+        "ELSE null + null END AS x"
+    )
+    assert sorted(r["x"] or "" for r in df.collect()) == ["", "", "", "Alice"]
 
 
 def test_kleene_logic(golden):

@@ -40,6 +40,8 @@ SHUFFLE_BUDGET = {
     "varlength_path": 3,   # one dedup per hop depth of the 1/2/3-hop union
     "agg_pricing_summary": 1,
     "qpp_reach": 1,        # union of 1/2-rep join chains + its aggregation
+    "undirected_hop": 1,   # both orientations fold to one; its aggregation
+    "varlength_unlabeled": 1,  # tip joins the among-restricted union scan
 }
 
 # audited beyond the bench workload (kept out of BENCH_QUERIES so the
@@ -49,6 +51,15 @@ AUDIT_EXTRA = [
         "qpp_reach",
         "MATCH (s:Lineitem)((a)-[r:NEXT_LINE]->(b)){1,2}(t:Lineitem) "
         "WHERE s.linenumber = 1 RETURN size(r) AS hops, count(*) AS cnt",
+    ),
+    (
+        "undirected_hop",
+        "MATCH (n:Nation)-[:IN_REGION]-(r) RETURN r.name AS region, count(*) AS cnt",
+    ),
+    (
+        "varlength_unlabeled",
+        "MATCH (a:Lineitem)-[:NEXT_LINE*1..2]->(b) WHERE a.linenumber = 1 "
+        "RETURN b.linenumber AS ln, count(*) AS cnt",
     ),
 ]
 
