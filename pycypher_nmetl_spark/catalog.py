@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import os
 import threading
+from collections.abc import Collection
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -49,6 +50,18 @@ class TableMeta:
     # estimates (guards._rows_estimate re-derives or degrades gracefully)
     row_estimate_epoch: int = 0
     row_estimate_pinned: bool = False  # user-supplied: never invalidated
+    # edge table registered without an id column: its ids are hashes of
+    # the endpoints, so CREATE hashes too instead of allocating max + 1
+    hash_ids: bool = False
+
+
+def _partitions(df: DataFrame) -> int:
+    """``df``'s partition count, or 0 when its plan is adaptive: to
+    answer, AQE would run the plan's shuffle stages."""
+    qe = df._jdf.queryExecution()
+    if qe.executedPlan().getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        return 0
+    return qe.toRdd().getNumPartitions()
 
 
 class GraphCatalog:
@@ -82,7 +95,8 @@ class GraphCatalog:
         # endpoint = owner.<fk_prop>, id = xxhash64(src, dst), no props).
         # The pattern compiler uses this to traverse owner -> other as a
         # pure column projection instead of a node⋈edge self-join of the
-        # same parquet. Invalidated the moment either table is replaced.
+        # same parquet. A write to either table drops it unless the write
+        # provably keeps it (the FK-projection rule of write()).
         self._fk_collapse: dict[str, tuple[str, str, str]] = {}
         # monotonic upper bound on allocated ids per (kind, name): the
         # first CREATE per table pays one max(id) scan, later CREATEs
@@ -149,12 +163,15 @@ class GraphCatalog:
                 "'type', which is reserved for the relationship type — "
                 "rename it before registering"
             )
-        if ID not in df.columns:
+        hash_ids = ID not in df.columns
+        if hash_ids:
             # deterministic distributed edge id: hash of endpoints
             df = df.withColumn(ID, F.xxhash64(F.col(SRC), F.col(DST)))
         self._edges[rel_type] = df
         self._edge_endpoints[rel_type] = (src_label, dst_label)
-        self._meta[("e", rel_type)] = TableMeta(broadcastable=bool(broadcastable))
+        self._meta[("e", rel_type)] = TableMeta(
+            broadcastable=bool(broadcastable), hash_ids=hash_ids
+        )
         self._max_id_cache.pop(("e", rel_type), None)
         if fk_collapse is not None:
             self._fk_collapse[rel_type] = fk_collapse
@@ -209,6 +226,12 @@ class GraphCatalog:
         meta = self._meta.get((kind, name))
         return bool(meta and meta.broadcastable)
 
+    def hash_ids(self, rel_type: str) -> bool:
+        """True when the edge type's ids are endpoint hashes (registered
+        without an ``id`` column)."""
+        meta = self._meta.get(("e", rel_type))
+        return bool(meta and meta.hash_ids)
+
     # ------------------------------------------------------------------ #
     # transactions (shadow layer -> atomic pointer swap)
     # ------------------------------------------------------------------ #
@@ -233,7 +256,10 @@ class GraphCatalog:
         canonical frame is replaced by one ``localCheckpoint`` *before*
         the swap, on the caller's thread (its jobs join the caller's job
         group, described ``compact <kind>:<name>``); if that raises, the
-        caller rolls back and the canonical tables are untouched. With
+        caller rolls back and the canonical tables are untouched. The
+        checkpoint keeps the table's partition count at most
+        ``max(its canonical frame's count, defaultParallelism)`` (a
+        narrow coalesce: no shuffle, no extra job). With
         ``durable_path`` the committed state is persisted via
         :meth:`save_durable` (crash-consistent parquet snapshot), which
         re-points every table at the parquet it wrote.
@@ -251,13 +277,24 @@ class GraphCatalog:
 
     def _compact(self, kind: str, shadow: dict, canonical: dict) -> None:
         """Replace, in ``shadow``, every frame that is not its canonical
-        one with its local checkpoint. Written straight into the dict:
-        the bookkeeping of set_nodes/set_edges already ran at the write."""
+        one with its local checkpoint. A frame with more partitions than
+        ``max(its canonical's, defaultParallelism)`` is narrow-coalesced
+        to that bound first: an append unions the new rows' partitions
+        onto the table's, so without the bound every CREATE would add
+        partitions, and tasks, to each later scan. Written straight into
+        the dict: the bookkeeping of :meth:`write` already ran."""
         sc = self.spark.sparkContext
         previous = sc.getLocalProperty("spark.job.description")
         try:
             for name, df in shadow.items():
-                if df is not canonical.get(name):
+                old = canonical.get(name)
+                if df is not old:
+                    bound = max(
+                        _partitions(old) if old is not None else 0,
+                        sc.defaultParallelism,
+                    )
+                    if _partitions(df) > bound:
+                        df = df.coalesce(bound)
                     sc.setJobDescription(f"compact {kind}:{name}")
                     shadow[name] = df.localCheckpoint()
         finally:
@@ -380,6 +417,7 @@ class GraphCatalog:
                 "src_label": src_l,
                 "dst_label": dst_l,
                 "broadcastable": self.is_broadcastable("e", rt),
+                "hash_ids": self.hash_ids(rt),
             })
             manifest["edges"][rt] = meta
         with open(os.path.join(vdir, "manifest.json"), "w") as f:
@@ -455,6 +493,7 @@ class GraphCatalog:
                 broadcastable=meta.get("broadcastable"),
                 fk_collapse=tuple(fk) if fk else None,
             )
+            cat._meta[("e", rt)].hash_ids = meta.get("hash_ids", False)
         cat.data_epoch = manifest.get("data_epoch", 0)
         return cat
 
@@ -462,7 +501,7 @@ class GraphCatalog:
         """Discard uncommitted shadows (reference: rollback_query)."""
         # endpoint registrations are not shadowed; entries promoted for
         # types created inside the rolled-back transaction would go stale
-        # (a later set_edges would keep them for a different table) —
+        # (a later write would keep them for a different table) —
         # prune the ones THIS transaction registered that have no
         # canonical table; another thread's open transaction keeps its
         # own. Degradations (label -> None) persisting past a rollback
@@ -497,19 +536,45 @@ class GraphCatalog:
         key = (kind, name)
         self._max_id_cache[key] = max(self._max_id_cache.get(key, 0), int(value))
 
-    def set_nodes(self, label: str, df: DataFrame) -> None:
-        """Write a node table into the active shadow (or canonical store)."""
-        self._store("n")[label] = df
-        # the edge-as-node-projection equivalence no longer holds once the
-        # owner table diverges from the registered edge frame
-        for rt, (owner, _side, _fk) in list(self._fk_collapse.items()):
-            if owner == label:
-                self._fk_collapse.pop(rt, None)
+    def write(
+        self,
+        kind: str,
+        name: str,
+        df: DataFrame,
+        changed: frozenset[str] | None = None,
+        proven: Collection[str] = (),
+    ) -> None:
+        """The one table write of a mutation: node ('n') or edge ('e')
+        table ``name`` becomes ``df`` in the active shadow (or canonical
+        store).
 
-    def set_edges(self, rel_type: str, df: DataFrame) -> None:
-        self._store("e")[rel_type] = df
-        self._set_endpoints(rel_type, self.edge_endpoints(rel_type))
-        self._fk_collapse.pop(rel_type, None)
+        FK-projection rule: the proof "edge type T is the projection of
+        owner label O on (id, fk)" (:meth:`fk_collapse`) survives a write
+        to O or to T only when either
+          * the write is a property write to O (``changed``: the property
+            keys it sets or removes) that changes neither ``id`` nor fk;
+          * T is in ``proven``: the write belongs to a CREATE clause that
+            checked, before its first write, that every O node it creates
+            gets exactly one T edge to a node proven to carry T's far
+            label, with no properties, and that o.fk equals that node's
+            id on every row (compiler/mutations.py, ``_fk_plan``).
+        Every other write to O or T (``changed=None``: rows added or
+        removed, a replace-all map, a label write) drops the proof. The
+        rule is applied before the table changes, and a dropped proof is
+        never re-added, so a rollback or a concurrent transaction can
+        only lose the optimization, never gain a false proof."""
+        for rt, (owner, _side, fk) in list(self._fk_collapse.items()):
+            if rt in proven:
+                continue
+            if kind == "n" and owner == name:
+                if changed is not None and not changed & {ID, fk}:
+                    continue
+            elif kind != "e" or rt != name:
+                continue
+            self._fk_collapse.pop(rt, None)
+        self._store(kind)[name] = df
+        if kind == "e":
+            self._set_endpoints(name, self.edge_endpoints(name))
 
     def _set_endpoints(self, rel_type: str, ends: tuple[str | None, str | None]) -> None:
         """Record an endpoint registration; a type first registered inside

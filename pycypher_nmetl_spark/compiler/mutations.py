@@ -13,7 +13,11 @@ sequentially (mutation_engine.py:229-322). We allocate
 session-cached upper bound (one full-table max per label per session,
 then maintained from the checkpointed new rows' maxima; see
 GraphCatalog.id_base), so id assignment is fully distributed and
-gap-tolerant with no per-statement table scan.
+gap-tolerant with no per-statement table scan. An edge type registered
+without ids (its ids are endpoint hashes, GraphCatalog.hash_ids) takes
+hashed ids instead, with no max: the hash of the endpoints for an edge
+that keeps an FK proof (below), else the hash of the endpoints and a
+per-row salt unique in the session.
 
 Write-back rule: each mutation clause materializes exactly one frame
 (``localCheckpoint``), and every table write (``_write``) combines the
@@ -25,22 +29,44 @@ gains. MERGE and FOREACH are composed of these. So every value (a fresh
 id, ``rand()``, ``randomUUID()``) is computed once, RETURN sees exactly
 what was stored, and no table is joined to its own lineage. SET applies
 its items left to right: a later item sees what an earlier one stored,
-and the last write per key wins.
+and the last write per key wins. An edge whose id is its endpoint hash
+(a kept FK proof) is cut from the CREATE's materialization with no
+further one.
+
+FK-proof rule: every ``_write`` goes through ``GraphCatalog.write``,
+which keeps the proof "edge type T is the projection of owner label O
+on (id, fk)" (``fk_collapse``, read by patterns._try_fk_collapse) for
+exactly two kinds of write, and drops it on any other write to O or T.
+A property write to O (SET, REMOVE, ``+=``) that sets neither id nor fk
+keeps it; a replace-all ``=`` map does not. A CREATE clause keeps it
+when every O node it creates is the owner end of exactly one created T
+edge with no properties, whose other end is a node bound before the
+clause and proven to carry T's far label, and when o.fk equals that
+node's id on every row: the shape is checked before the clause writes
+(``_fk_plan``), the values by one job on the materialized frame before
+the O write (``_check_fk``). MERGE and FOREACH keep it only through that
+CREATE path. A dropped proof is never re-added.
 
 Commit rule: the commit replaces every table the transaction wrote with
 one materialized relation (``GraphCatalog.commit``), so a committed
 table's plan is a single node whatever its write history, and within a
 transaction a table's plan grows only by the clauses of that
-transaction. At production scale both materializations would be
-Delta/parquet writes; the checkpoints are their local-mode stand-in.
+transaction. The commit also bounds the table's partition count by
+``max(its committed count, defaultParallelism)`` with a narrow
+coalesce, so appends do not add scan tasks write after write. At
+production scale both materializations would be Delta/parquet writes;
+the checkpoints are their local-mode stand-in.
 """
 
 from __future__ import annotations
 
+import secrets
+from collections.abc import Collection
 from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
 from pycypher_nmetl_spark.compiler.bindings import Bindings, VarInfo, fresh_name, pcol
 from pycypher_nmetl_spark.compiler.exprs import ExprCompiler
@@ -106,7 +132,8 @@ def _advance_id_base(
     are opaque (only distinctness is promised), so the gap the
     reservation leaves between CREATE statements is harmless; ~2^29
     single-partition CREATEs fit before the overflow fallback (one
-    exact aggregate) engages."""
+    exact aggregate) engages. Hash-id edge types, whose ids start near
+    2^63, never come here (_create_edges hashes their ids)."""
     p = max(1, df.rdd.getNumPartitions())
     bound = base_max + 1 + p * _MONO_BLOCK
     if bound > (1 << 62):
@@ -115,14 +142,20 @@ def _advance_id_base(
     cat.note_max_id(kind, name, bound)
 
 
-def _write(cat, kind: str, name: str, change) -> None:
+def _write(
+    cat, kind: str, name: str, change,
+    changed: frozenset[str] | None = None, proven: Collection[str] = (),
+) -> None:
     """The one table write-back: node table (kind 'n') or edge table
     ('e') ``name`` becomes ``change(old)``, where ``old`` is the current
-    table or None for a new label/type."""
+    table or None for a new label/type. ``changed`` (the keys of a
+    property write) and ``proven`` (the FK proofs a checked CREATE
+    keeps) feed GraphCatalog.write's FK-projection rule."""
     if kind == "n":
-        cat.set_nodes(name, change(cat.nodes(name) if cat.has_label(name) else None))
+        old = cat.nodes(name) if cat.has_label(name) else None
     else:
-        cat.set_edges(name, change(cat.edges(name) if cat.has_rel_type(name) else None))
+        old = cat.edges(name) if cat.has_rel_type(name) else None
+    cat.write(kind, name, change(old), changed, proven)
 
 
 def _append(rows: DataFrame):
@@ -185,33 +218,121 @@ def _cut_ids(bindings: Bindings, var: str, disc: str | None, tables: list[str]):
 def compile_create(
     engine: "CypherEngine", bindings: Bindings, clause: Create, params: dict
 ) -> Bindings:
+    kept = _fk_plan(engine.catalog, bindings, clause)
     for path in clause.paths:
         elements = path.elements
         # pass 1: create unbound node vars (one new node per binding row)
         for el in elements:
             if isinstance(el, NodePattern):
-                var = el.var or fresh_name("_anon")
-                el.var = var
+                var = el.var
                 if var in bindings.vars:
                     if el.labels or el.props:
                         raise ValueError(
                             f"variable {var!r} already bound; CREATE cannot re-specify it"
                         )
                     continue
-                bindings = _create_nodes(engine, bindings, el, params)
+                bindings = _create_nodes(engine, bindings, el, params, kept)
         # pass 2: create one edge per binding row for each rel pattern
         i = 1
         while i < len(elements):
             rel: RelPattern = elements[i]
             left: NodePattern = elements[i - 1]
             right: NodePattern = elements[i + 1]
-            bindings = _create_edges(engine, bindings, left, rel, right, params)
+            bindings = _create_edges(engine, bindings, left, rel, right, params, kept)
             i += 2
     return bindings
 
 
+def _fk_plan(cat, bindings: Bindings, clause: Create) -> dict[str, list]:
+    """The FK-projection proofs (GraphCatalog.write) this CREATE clause
+    may keep, as {T: [(owner var, fk, far var, O's id type, O's fk
+    type)] for each T edge it creates}. A proof "T = projection of owner
+    label O on (id, fk)" that the clause writes (it creates O nodes or
+    T edges) is a candidate when every O node the clause creates is the
+    owner-side end of exactly one created T edge, and every created T
+    edge has such an owner, no property map, and at its other end a
+    node bound before the clause and proven to carry T's registered far
+    label. _check_fk then drops a candidate whose rows fail its checks.
+    Names the clause's anonymous nodes (``_anon``), as pass 1 would."""
+    created: dict[str, str | None] = {}  # var -> label, for created nodes
+    edges: list[tuple[RelPattern, str, str]] = []  # (rel, src var, dst var)
+    for path in clause.paths:
+        els = path.elements
+        for el in els[::2]:
+            el.var = el.var or fresh_name("_anon")
+            if el.var not in bindings.vars and el.var not in created:
+                created[el.var] = el.labels[0] if len(el.labels) == 1 else None
+        for i in range(1, len(els), 2):
+            left, right = els[i - 1].var, els[i + 1].var
+            edges.append((els[i], *((left, right) if els[i].direction == "R" else (right, left))))
+    plan: dict[str, list] = {}
+    for rt in cat.rel_types():
+        fk = cat.fk_collapse(rt)
+        if fk is None:
+            continue
+        owner, side, fk_prop = fk
+        owners = sorted(v for v, label in created.items() if label == owner)
+        far_label = cat.edge_endpoints(rt)[0 if side == "dst" else 1]
+        checks = []
+        for rel, src, dst in edges:
+            if rel.types != [rt]:
+                continue
+            o, far = (src, dst) if side == "src" else (dst, src)
+            info = bindings.vars.get(far)
+            if (
+                rel.props is not None or created.get(o) != owner
+                or info is None or info.kind != "node"
+                or far_label is None or far_label not in info.labels
+            ):
+                break
+            checks.append((o, fk_prop, far))
+        else:
+            if owners and sorted(o for o, _, _ in checks) == owners:
+                types = {f.name: f.dataType for f in cat.nodes(owner).schema}
+                keys = types.get(ID), types.get(fk_prop)
+                plan[rt] = [(*check, *keys) for check in checks]
+    return plan
+
+
+def _fits(a, b) -> bool:
+    """A column of type ``a`` unions into one of type ``b`` and leaves
+    it ``b``."""
+    width = {"byte": 1, "short": 2, "integer": 3, "long": 4}
+    return a == b or (
+        isinstance(a, IntegralType) and isinstance(b, IntegralType)
+        and width[a.typeName()] <= width[b.typeName()]
+    )
+
+
+def _check_fk(df: DataFrame, var: str, plan: dict[str, list]) -> None:
+    """Drop from ``plan`` every proof whose check on the created owner
+    node ``var`` fails, on ``df``, the clause's materialized frame. The
+    ids of ``var`` and of the far node must have the types of the owner
+    table's id and fk, so the edge's endpoint hash (_create_edges) is
+    the one the collapsed hop derives; ``var``'s fk column must append
+    to the owner table without changing its type, and equal the far id,
+    never null, on every row. One job, before the node's write."""
+    types = {f.name: f.dataType for f in df.schema}
+    bad = {}  # proof -> its count of rows where o.fk is not the far id
+    for rt, checks in list(plan.items()):
+        for o, fk, far, t_id, t_fk in checks:
+            if o != var:
+                continue
+            col = pcol(var, fk)
+            if types[o] == t_id and types[far] == t_fk and _fits(types.get(col), t_fk):
+                ok = F.coalesce(F.col(col) == F.col(far), F.lit(False))
+                bad[rt] = F.count(F.when(~ok, 1))
+            else:
+                del plan[rt]
+    if bad:
+        for rt, n in zip(bad, df.agg(*bad.values()).first()):
+            if n:
+                del plan[rt]
+
+
 def _create_nodes(
-    engine: "CypherEngine", bindings: Bindings, np: NodePattern, params: dict
+    engine: "CypherEngine", bindings: Bindings, np: NodePattern, params: dict,
+    kept: dict[str, list],
 ) -> Bindings:
     cat = engine.catalog
     if len(np.labels) != 1:
@@ -277,7 +398,8 @@ def _create_nodes(
                 )
         cat.note_max_id("n", label, row["m"])
 
-    _write(cat, "n", label, _append(_entity_rows(df, var)))
+    _check_fk(df, var, kept)
+    _write(cat, "n", label, _append(_entity_rows(df, var)), proven=kept)
     return Bindings(df, {**bindings.vars, var: VarInfo("node", (label,), anon=var.startswith("_anon"))})
 
 
@@ -288,7 +410,16 @@ def _create_edges(
     rel: RelPattern,
     right: NodePattern,
     params: dict,
+    kept: dict[str, list],
 ) -> Bindings:
+    """One new ``rel`` edge per binding row. Its id: for a kept FK
+    projection (``kept``, see _fk_plan) the endpoint hash register_edges
+    derives, computed from the already-materialized bindings with no
+    allocation and no further materialization; for any other edge of a
+    hash-id type (GraphCatalog.hash_ids) the hash of its endpoints and a
+    per-row salt unique in the session (a random statement nonce and
+    ``monotonically_increasing_id``); otherwise the cached id bound plus
+    one plus ``monotonically_increasing_id``."""
     cat = engine.catalog
     if len(rel.types) != 1:
         raise ValueError(f"CREATE relationship needs exactly one type, got {rel.types}")
@@ -298,19 +429,28 @@ def _create_edges(
     rvar = rel.var or fresh_name("_anon")
     src_var, dst_var = (left.var, right.var) if rel.direction == "R" else (right.var, left.var)
 
-    known = cat.has_rel_type(rtype)
-    base_max = max(cat.id_base("e", rtype, cat.edges(rtype)), 0) if known else 0
+    ends = F.col(src_var), F.col(dst_var)
+    allocate = rtype not in kept and not cat.hash_ids(rtype)
+    if rtype in kept:
+        ids = F.xxhash64(*ends)
+    elif not allocate:
+        salt = F.lit(secrets.randbits(63)), F.monotonically_increasing_id()
+        ids = F.xxhash64(*ends, *salt)
+    else:
+        known = cat.has_rel_type(rtype)
+        base_max = max(cat.id_base("e", rtype, cat.edges(rtype)), 0) if known else 0
+        ids = F.lit(base_max + 1) + F.monotonically_increasing_id()
 
     cc = ExprCompiler(bindings, params, {}, engine.functions)
-    df = bindings.df.withColumn(
-        rvar, F.lit(base_max + 1) + F.monotonically_increasing_id()
-    )
+    df = bindings.df.withColumn(rvar, ids)
     df = df.withColumn(pcol(rvar, "src"), F.col(src_var))
     df = df.withColumn(pcol(rvar, "dst"), F.col(dst_var))
     for key, expr_ast in prop_pairs(rel.props, params):
         df = df.withColumn(pcol(rvar, key), cc.col(expr_ast))
-    df = df.localCheckpoint()
-    _advance_id_base(cat, "e", rtype, df, base_max, rvar)
+    if rtype not in kept:
+        df = df.localCheckpoint()
+    if allocate:
+        _advance_id_base(cat, "e", rtype, df, base_max, rvar)
 
     # Endpoint-registration enforcement (VERDICT r12 #4): the appended
     # rows must not silently invalidate the (src_label, dst_label) proof
@@ -326,7 +466,7 @@ def _create_edges(
         rtype, _proven_labels(src_var), _proven_labels(dst_var)
     )
     # rvar__src / rvar__dst were added first, so the rows lead id, src, dst
-    _write(cat, "e", rtype, _append(_entity_rows(df, rvar)))
+    _write(cat, "e", rtype, _append(_entity_rows(df, rvar)), proven=kept)
     return Bindings(
         df, {**bindings.vars, rvar: VarInfo("rel", (rtype,), anon=rel.var is None)}
     )
@@ -478,8 +618,12 @@ def _write_properties(
             joined = joined.withColumn(key, col)
         return joined.drop("_hit", *vals)
 
+    # a replace-all map clears the keys it leaves out: it may change any
+    changed = None if replace_all else frozenset(keys)
     for table_name, upd_t in _by_table(upd, disc, tables).items():
-        _write(engine.catalog, kind, table_name, lambda tdf: upsert(tdf, upd_t))
+        _write(
+            engine.catalog, kind, table_name, lambda tdf: upsert(tdf, upd_t), changed
+        )
 
 
 def compile_set(

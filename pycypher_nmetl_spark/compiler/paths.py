@@ -82,6 +82,7 @@ def build_varlength_path(
     while i < len(elements):
         rel: RelPattern = elements[i]
         nxt: NodePattern = elements[i + 1]
+        tip = i + 2 == len(elements) and not path.var
         if rel.varlength:
             # i == 1: pb is still the pristine seed — a node_scan (unique
             # on (id, label) by construction, also across an unlabeled
@@ -92,11 +93,11 @@ def build_varlength_path(
             # been through a join and may repeat starts.
             pb, rvar, hop_col = _expand_varlength(
                 engine, pb, prev_var, rel, nxt, outer, params, path.shortest,
-                starts_unique=(i == 1),
+                starts_unique=(i == 1), tip=tip,
             )
             hop_cols.append(hop_col)
         else:
-            pb, rvar = _expand(engine, pb, prev_var, rel, nxt, outer, params)
+            pb, rvar = _expand(engine, pb, prev_var, rel, nxt, outer, params, tip=tip)
             hop_cols.append(F.lit(1))
         rel_vars.append((rvar, tuple(rel.types)))
         prev_var = _ensure_var(nxt)
@@ -193,10 +194,11 @@ def _expand_varlength(
     params: dict,
     shortest: str | None,
     starts_unique: bool = False,
+    tip: bool = False,
 ):
     from pycypher_nmetl_spark.compiler.patterns import (
         _ensure_var, bind_far_endpoint, filter_props, other_side_labels,
-        pattern_labels,
+        pattern_labels, unread_tip,
     )
 
     cat = engine.catalog
@@ -269,7 +271,8 @@ def _expand_varlength(
     use_types = list(rel.types) if rel.types else cat.rel_types()
     among = other_side_labels(cat, use_types, rel.direction) if lo >= 1 else None
     pb = bind_far_endpoint(
-        engine, pb, nxt, pattern_labels(nxt, outer), tipname, tiplname, among
+        engine, pb, nxt, pattern_labels(nxt, outer), tipname, tiplname, among,
+        unread_tip(engine, rel, nxt, tip),
     )
     pb = filter_props(engine, pb, nvar, nxt.props, params)
     pb = pb.with_df(pb.df.drop(tipname, tiplname))

@@ -34,6 +34,7 @@ from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from pycypher_nmetl_spark.compiler.astutil import property_uses, walk
 from pycypher_nmetl_spark.compiler.bindings import Bindings, VarInfo, fresh_name, pcol
@@ -43,6 +44,7 @@ from pycypher_nmetl_spark.cypher.ast_nodes import (
     Param, PathPattern, PatternComp, PatternPred, QuantPathPattern,
     Quantifier, Reduce, RelPattern, Var,
 )
+from pycypher_nmetl_spark.session import local_frame
 
 
 # ---------------------------------------------------------------------- #
@@ -190,8 +192,8 @@ def node_scan(
             # rows (and OPTIONAL MATCH one null row) — not an error.
             # Writes still go through cat.nodes() directly, which does
             # raise, so CREATE/MERGE label registration is unaffected.
-            empty = engine.spark.createDataFrame([], "id long").select(
-                F.col("id").alias(var)
+            empty = local_frame(
+                engine.spark, [], T.StructType([T.StructField(var, T.LongType())])
             )
             return empty, VarInfo("node", tuple(labels))
         df = cat.nodes(labels[0])
@@ -307,7 +309,7 @@ def build_path_frame(
             var = _ensure_var(first)
             pb, rvar = _expand(
                 engine, None, var, rel0, elements[2], outer, params,
-                seed_labels=seed_labels,
+                seed_labels=seed_labels, tip=len(elements) == 3 and not path.var,
             )
             rel_vars.append((rvar, tuple(rel0.types)))
             pb = apply_var_preds(engine, pb, var_preds, applied, params)
@@ -319,7 +321,10 @@ def build_path_frame(
     while i < len(elements):
         rel: RelPattern = elements[i]
         nxt: NodePattern = elements[i + 1]
-        pb, rvar = _expand(engine, pb, _node_var(first if i == 1 else elements[i - 1]), rel, nxt, outer, params)
+        pb, rvar = _expand(
+            engine, pb, _node_var(first if i == 1 else elements[i - 1]), rel, nxt,
+            outer, params, tip=i + 2 == len(elements) and not path.var,
+        )
         rel_vars.append((rvar, tuple(rel.types)))
         pb = apply_var_preds(engine, pb, var_preds, applied, params)
         i += 2
@@ -498,6 +503,7 @@ def bind_far_endpoint(
     far: str,
     far_label: str | None,
     among: list[str] | None = None,
+    unread: bool = False,
 ) -> Bindings:
     """Bind a hop's far endpoint ``nxt`` (named by _ensure_var) from the
     frame's id column ``far``. ``far_label`` is the column holding the
@@ -513,7 +519,10 @@ def bind_far_endpoint(
         join the label's node scan for its properties;
       * named with no label known: join the union-all scan
         (pattern_matcher.py:152-284) on id and label, restricted to
-        ``among``, the labels the caller proved the side can carry.
+        ``among``, the labels the caller proved the side can carry. An
+        ``unread`` endpoint (see :func:`unread_tip`) semi-joins the
+        scan instead: it must exist, but an id that several labels hold
+        counts its edge once.
 
     The far column itself becomes the binding; the caller drops its
     transient label columns."""
@@ -537,9 +546,26 @@ def bind_far_endpoint(
         cond = (df[far] == ndf[nvar]) & (
             (df[far_label] == "") | (df[far_label] == ndf[pcol(nvar, "label")])
         )
+        if unread:
+            df = df.join(ndf, cond, "left_semi").withColumn(nvar, F.col(far))
+            return Bindings(df, {**pb.vars, nvar: VarInfo("node", (), anon=True)})
     df = df.join(ndf, cond, "inner").drop(ndf[nvar]).withColumn(nvar, F.col(far))
     info = VarInfo("node", tuple(labels), anon=nvar.startswith("_anon"))
     return Bindings(df, {**pb.vars, nvar: info})
+
+
+def unread_tip(engine: "CypherEngine", rel: RelPattern, nxt: NodePattern, tip: bool) -> bool:
+    """True when nothing reads hop ``rel``'s far endpoint ``nxt`` beyond
+    its existence: ``tip`` (it ends a path with no path variable, so no
+    later hop, ``nodes(p)`` or ``RETURN p`` sees it), it is anonymous
+    with no property map, and the relationship is anonymous or read only
+    through properties (no ``startNode``/``endNode``)."""
+    return (
+        tip
+        and nxt.var.startswith("_anon")
+        and not nxt.props
+        and (rel.var is None or rel.var in engine._query.uses)
+    )
 
 
 def _try_fk_collapse(
@@ -660,8 +686,10 @@ def _expand(
     outer: Bindings,
     params: dict,
     seed_labels: list[str] | None = None,
+    tip: bool = False,
 ) -> tuple[Bindings, str]:
     """One fixed-length hop: bindings ⋈ edges ⋈ endpoint label table.
+    ``tip``: ``nxt`` ends a path that has no path variable.
 
     ``pb=None`` is seed-from-edge mode (EXISTS flag subqueries whose
     seed var needs only its id): ``prev_var`` binds directly from the
@@ -792,7 +820,10 @@ def _expand(
         pb = Bindings(df, {**pb.vars, nvar: info})
     else:
         among = other_side_labels(cat, use_types, rel.direction)
-        pb = bind_far_endpoint(engine, pb, nxt, labels, other_col, olcol, among)
+        pb = bind_far_endpoint(
+            engine, pb, nxt, labels, other_col, olcol, among,
+            unread_tip(engine, rel, nxt, tip),
+        )
     pb = filter_props(engine, pb, nvar, nxt.props, params)
     return pb.with_df(pb.df.drop(jlcol, olcol)), rvar
 

@@ -36,6 +36,7 @@ from pycypher_nmetl_spark.cypher.ast_nodes import (
     Projection, Query, Remove, SetClause, UnionQuery, Unwind,
 )
 from pycypher_nmetl_spark.cypher.parser import parse
+from pycypher_nmetl_spark.session import local_frame
 
 
 def _join_comparable(dt) -> bool:
@@ -1070,6 +1071,7 @@ class CypherEngine:
         self.last_compile_report: list[tuple[str, float]] = []
         bindings = initial if initial is not None else Bindings.unit(self.spark)
         for clause in clauses:
+            before = bindings.vars
             t0 = time.perf_counter()
             bindings, result = self._run_clause(clause, bindings, params, mutations)
             self.last_compile_report.append(
@@ -1077,10 +1079,14 @@ class CypherEngine:
             )
             if result is not None:
                 return result
-        # no RETURN: mutation-only query -> empty result
+        if clauses and isinstance(clauses[-1], CallProc):
+            # a query ending in CALL answers the procedure's output columns
+            return bindings.df.select(*[v for v in bindings.vars if v not in before])
+        # no RETURN: mutation-only query -> empty result (a local relation,
+        # so collecting it runs no job)
         from pyspark.sql import types as T
 
-        return self.spark.createDataFrame([], T.StructType([]))
+        return local_frame(self.spark, [], T.StructType([]))
 
     def _run_clause(self, clause, bindings, params, mutations):
         """Dispatch one clause; returns (new_bindings, result_df_or_None)."""

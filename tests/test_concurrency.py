@@ -219,8 +219,8 @@ def test_rollback_keeps_other_threads_endpoint_registration(ceng, spark):
     def thread_a():
         cat.begin()
         cat.reconcile_edge_endpoints("NEW_REL", ("Item",), ("Hub",))
-        cat.set_edges(
-            "NEW_REL", spark.createDataFrame([(1, 5, 0)], "id long, src long, dst long")
+        cat.write(
+            "e", "NEW_REL", spark.createDataFrame([(1, 5, 0)], "id long, src long, dst long")
         )
         a_registered.set()
         assert b_rolled_back.wait(60)

@@ -10,7 +10,10 @@ Pinned here:
 2. a cyclic close onto an already-bound variable checks every label it
    declares (a label no node carries matches nothing, not an error), on
    fixed and var-length hops alike, and applies its property map;
-3. an anonymous far endpoint stays out of ``RETURN *``.
+3. an anonymous far endpoint stays out of ``RETURN *``;
+4. an anonymous far endpoint nothing reads, on an edge type registered
+   without endpoint labels, counts each edge once even when several
+   labels hold its id, and still has to exist.
 """
 
 from __future__ import annotations
@@ -136,3 +139,30 @@ def test_cyclic_close_checks_labels_and_props(hop, hops, end, want):
 )
 def test_anonymous_endpoint_not_returned_by_star(hop, q):
     assert hop.execute(q).columns == ["a"]
+
+
+@pytest.mark.parametrize(
+    "q, want",
+    [
+        ("MATCH (a:Person)-[:LIKES]->() RETURN a.name AS a", [("Alice",)]),
+        ("MATCH (a:Person)-[:LIKES*1..1]->() RETURN a.name AS a", [("Alice",)]),
+        ("MATCH (a:Person)-[:LIKES*1..2]->() RETURN a.name AS a", [("Alice",)]),
+        ("MATCH (a:Person)-[r:LIKES]->() RETURN r.w AS w", [(None,)]),
+        # a named endpoint binds each node that holds the id
+        ("MATCH (a:Person)-[:LIKES]->(b) RETURN a.name AS a", [("Alice",), ("Alice",)]),
+        # a named path reads its endpoint
+        ("MATCH p = (a:Person)-[:LIKES]->() RETURN a.name AS a", [("Alice",), ("Alice",)]),
+    ],
+)
+def test_unread_anonymous_endpoint_counts_each_edge_once(hop, q, want):
+    """Person 3 and Robot 3 share the id of LIKES 1->3's far end; the
+    dangling LIKES 2->99 matches nothing."""
+    from pyspark.sql import functions as F
+
+    hop.catalog.register_edges(
+        "LIKES",
+        hop.spark.createDataFrame(
+            [(200, 1, 3), (201, 2, 99)], "id long, src long, dst long"
+        ).withColumn("w", F.lit(None).cast("long")),
+    )
+    assert rows(hop.execute(q)) == want

@@ -354,6 +354,32 @@ def test_mutation_clause_runs_one_job(golden, monkeypatch, stmt, table):
     assert compactions == [f"compact {table}"]
 
 
+@pytest.mark.parametrize("stmt", [
+    "CREATE (:Person {name: 'Eve'})",
+    "MATCH (n:Person {name:'Bob'}) SET n.age = 26",
+    "MATCH (n:Person {name:'Dave'}) DELETE n",
+])
+def test_mutation_only_result_runs_no_job(golden, monkeypatch, stmt):
+    """A query without RETURN answers an empty local relation: ``run``
+    collects it without a Spark job once ``execute`` returns (an empty
+    Python-RDD frame ran one job of Python-worker tasks)."""
+    sc = golden.spark.sparkContext
+    group = f"mutation-result-probe: {stmt}"
+    execute = golden.execute
+
+    def then_probe(*args, **kwargs):
+        df = execute(*args, **kwargs)
+        sc.setJobGroup(group, "mutation result audit")
+        return df
+
+    monkeypatch.setattr(golden, "execute", then_probe)
+    try:
+        assert golden.run(stmt) == []
+    finally:
+        sc.setJobGroup(None, None)
+    assert not sc.statusTracker().getJobIdsForGroup(group)
+
+
 def test_set_items_apply_left_to_right(run):
     """A later SET item sees what the earlier ones stored (openCypher):
     salary is computed from the age set just before it, not Bob's 25."""
@@ -396,10 +422,15 @@ def test_set_same_key_twice_last_wins(run):
 def test_commits_leave_flat_tables(golden, run):
     """Every commit leaves each table it wrote as one materialized
     relation: over 100 commits mixing CREATE, SET and DELETE on one
-    label, its logical plan is one line after each, and its rows end
-    equal to a plain-Python model of the same writes."""
+    label (50 of them CREATEs), its logical plan is one line after each,
+    its partition count never passes max(the count before,
+    defaultParallelism), and its rows end equal to a plain-Python model
+    of the same writes."""
     cat = golden.catalog
     model = {r[0]: r[1] for r in run("MATCH (n:Person) RETURN n.name, n.age")}
+    bound = max(
+        _partitions(cat.nodes("Person")), golden.spark.sparkContext.defaultParallelism
+    )
     for i in range(100):
         step = i % 4
         if step == 0:
@@ -421,7 +452,17 @@ def test_commits_leave_flat_tables(golden, run):
             golden.execute("MATCH (n:Person {name: $n}) DELETE n", {"n": f"p{i - 3}"})
             del model[f"p{i - 3}"]
         assert _logical_lines(cat.nodes("Person")) == 1, f"after commit {i}"
+        assert _partitions(cat.nodes("Person")) <= bound, f"after commit {i}"
     assert run("MATCH (n:Person) RETURN n.name, n.age") == sorted(model.items(), key=repr)
+
+
+def test_bulk_create_keeps_parallelism(golden, run):
+    """The commit's partition bound never coalesces a table below
+    defaultParallelism: a bulk CREATE stays spread over the cores."""
+    golden.execute("UNWIND range(1, 5000) AS i CREATE (:Person {age: i})")
+    parallelism = golden.spark.sparkContext.defaultParallelism
+    assert _partitions(golden.catalog.nodes("Person")) >= parallelism
+    assert run("MATCH (n:Person) RETURN count(*) AS c") == [(5004,)]
 
 
 def test_failed_compaction_leaves_canonical_tables(golden, run, monkeypatch):
@@ -488,6 +529,10 @@ _SLOTS_LEFT = "MATCH (n:Slot) RETURN n.k AS v"
 
 def _logical_lines(df) -> int:
     return len(df._jdf.queryExecution().logical().toString().strip().splitlines())
+
+
+def _partitions(df) -> int:
+    return df.rdd.getNumPartitions()
 
 
 @pytest.mark.parametrize("setup,stmt,kind,table,check,expected", [
@@ -627,7 +672,7 @@ def test_durable_bucketed_roundtrip_shuffle_free_hop(spark, tmp_path):
 
     # a second save on the reloaded catalog rotates versions and drops
     # the old metastore entries without breaking the frames
-    cat2.set_nodes("Person", cat2.nodes("Person"))
+    cat2.write("n", "Person", cat2.nodes("Person"))
     v2 = cat2.save_durable(store, keep=1, buckets=4)
     assert v2 != v
     assert cat2.nodes("Person").count() == 50

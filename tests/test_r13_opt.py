@@ -180,13 +180,13 @@ class TestEndpointReconcile:
         cat = golden.catalog
         cat.begin()
         cat.reconcile_edge_endpoints("EPHEMERAL", ("Person",), ("Company",))
-        cat.set_edges(
-            "EPHEMERAL", spark.createDataFrame([(1, 1, 10)], "id long, src long, dst long")
+        cat.write(
+            "e", "EPHEMERAL", spark.createDataFrame([(1, 1, 10)], "id long, src long, dst long")
         )
         assert cat.edge_endpoints("EPHEMERAL") == ("Person", "Company")
         cat.rollback()
         # no canonical table -> the promoted registration is pruned, so a
-        # later set_edges cannot resurrect it for a different table
+        # later write cannot resurrect it for a different table
         assert cat.edge_endpoints("EPHEMERAL") == (None, None)
         assert not cat.has_rel_type("EPHEMERAL")
 

@@ -5,6 +5,8 @@ Expected values hand-verified against the golden graph in conftest
 just shapes).
 """
 
+import pytest
+
 
 def test_simple_scan(run):
     assert run("MATCH (n:Person) RETURN n.name AS name") == [
@@ -198,3 +200,30 @@ def test_call_procedure(run):
     assert run("CALL db.labels() YIELD label RETURN label") == [
         ("Company",), ("Person",)
     ]
+
+
+def test_standalone_call_returns_procedure_rows(run):
+    """A query that ends in CALL answers the procedure's output columns,
+    with or without YIELD (it answered no rows without RETURN)."""
+    assert run("CALL db.labels()") == [("Company",), ("Person",)]
+    assert run("CALL db.labels() YIELD label AS l") == [("Company",), ("Person",)]
+    assert run("CALL db.relationshipTypes()") == [("KNOWS",), ("WORKS_AT",)]
+
+
+@pytest.mark.parametrize("q,dtypes,expected", [
+    ("MATCH (n:NoSuchLabel) RETURN n", [("n", "bigint")], []),
+    ("OPTIONAL MATCH (n:NoSuchLabel) RETURN n", [("n", "bigint")], [(None,)]),
+    ("CALL db.labels()", [("label", "string")], [("Company",), ("Person",)]),
+    ("CALL db.labels() YIELD label RETURN label", [("label", "string")],
+     [("Company",), ("Person",)]),
+    ("MATCH (n:Person {name: 'Bob'}) SET n.age = 26", [], []),
+])
+def test_driver_local_frames_scan_no_python_rdd(golden, q, dtypes, expected):
+    """Frames the engine builds from Python values are JVM local
+    relations: the plan holds no Python-RDD scan (``Scan ExistingRDD``),
+    whose every collect runs a job of Python-worker tasks, and rows and
+    column types are the query's."""
+    df = golden.execute(q)
+    assert "ExistingRDD" not in df._jdf.queryExecution().executedPlan().toString()
+    assert df.dtypes == dtypes
+    assert sorted(map(tuple, df.collect()), key=repr) == expected
